@@ -66,15 +66,18 @@ def main():
         for c in g.columns:
             a, b = g[c].reset_index(drop=True), w[c].reset_index(drop=True)
             try:
-                eq = (a == b) | (a.isna() & b.isna())
+                # nullable dtypes compare NA to a value as NA, which
+                # .all() would skip: count it as a mismatch
+                eq = ((a == b) | (a.isna() & b.isna())).fillna(False)
                 # The driver compares a hash of FORMATTED values, so
                 # -0.0 vs 0.0 (equal as doubles) is a failure there;
                 # reproduce that strictness here (q_embed_pool lesson).
-                if str(a.dtype).startswith("float") and \
-                        str(b.dtype).startswith("float"):
+                # is_float_dtype also covers pandas' nullable Float64.
+                if pd.api.types.is_float_dtype(a) and \
+                        pd.api.types.is_float_dtype(b):
                     import numpy as np
-                    eq &= ~(np.signbit(a.fillna(0.0).to_numpy()) ^
-                            np.signbit(b.fillna(0.0).to_numpy()))
+                    eq &= ~(np.signbit(a.fillna(0.0).to_numpy(float)) ^
+                            np.signbit(b.fillna(0.0).to_numpy(float)))
             except Exception:
                 eq = a.astype(str) == b.astype(str)
             if not eq.all():

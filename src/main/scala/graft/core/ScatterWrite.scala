@@ -24,10 +24,10 @@ private[graft] object ScatterWrite {
     * data columns (kept). `renames` (logical → PHYSICAL, from
     * metadata-only RENAME COLUMN) applies last, so rewritten files
     * carry the same on-disk names as the files they replace.
-    * `noClobber = true` never overwrites an existing file at a target
-    * name: a concurrent committer that allocated the same name slot
-    * (both planned from the same maxPartitionIndex) keeps its file,
-    * and this write lands under a disambiguated name — the returned
+    * An existing file at a target name is never overwritten: a
+    * concurrent committer that allocated the same name slot (both
+    * planned from the same maxPartitionIndex) keeps its file, and
+    * this write lands under a disambiguated name — the returned
     * (index, ACTUAL name) pairs are what callers must register.
     */
   def partFiles(
@@ -40,8 +40,7 @@ private[graft] object ScatterWrite {
       nameOf: Int => String,
       orderCols: Seq[String] = Nil,
       dropOrderCols: Boolean = true,
-      renames: Map[String, String] = Map.empty,
-      noClobber: Boolean = false):
+      renames: Map[String, String] = Map.empty):
       IndexedSeq[(Int, String)] = {
     val shuffled = tagged.repartition(nparts, col("__part"))
     val sorted =
@@ -73,7 +72,7 @@ private[graft] object ScatterWrite {
     byPart.keys.toVector.sorted.foreach { i =>
       val partFiles = byPart(i)
       val name =
-        if (!noClobber || !fs.exists(new HPath(dir, nameOf(i)))) nameOf(i)
+        if (!fs.exists(new HPath(dir, nameOf(i)))) nameOf(i)
         else {
           // name slot already taken by a concurrent committer: land
           // under a disambiguated name (the sidecar lists file names

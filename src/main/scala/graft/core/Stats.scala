@@ -148,16 +148,14 @@ object Stats {
     */
   def forParts(
       parts: IndexedSeq[() => DataFrame],
-      indexCols: Seq[String],
-      concurrency: Int = 8): IndexedSeq[PartStats] = {
-    implicit val ec: ExecutionContext = statsEc(concurrency)
-    val futs = parts.map(p => Future(forDF(p(), indexCols)))
-    futs.map(f => Await.result(f, Duration.Inf))
+      indexCols: Seq[String]): IndexedSeq[PartStats] = {
+    val pool = java.util.concurrent.Executors.newFixedThreadPool(8,
+      r => { val t = new Thread(r, "graft-stats"); t.setDaemon(true); t })
+    try {
+      implicit val ec: ExecutionContext =
+        ExecutionContext.fromExecutorService(pool)
+      val futs = parts.map(p => Future(forDF(p(), indexCols)))
+      futs.map(f => Await.result(f, Duration.Inf))
+    } finally pool.shutdown()
   }
-
-  private def statsEc(concurrency: Int): ExecutionContext =
-    ExecutionContext.fromExecutorService(
-      java.util.concurrent.Executors.newFixedThreadPool(
-        math.max(1, concurrency),
-        r => { val t = new Thread(r, "graft-stats"); t.setDaemon(true); t }))
 }

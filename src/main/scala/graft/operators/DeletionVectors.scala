@@ -6,7 +6,7 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
 import graft.core.{DivisionRouter, FileOrdinal, FileOrdinalExpr, GraftFs,
-  PDataset, ScatterWrite, Sidecar, Stats}
+  PDataset, Sidecar, Stats}
 
 /** Merge-on-read deletes (deletion vectors): mark rows deleted by
   * (file, row position) in a `_graft_dv/` overlay instead of
@@ -182,31 +182,39 @@ object DeletionVectors {
     * surviving entries land as ONE fresh commit, then the old commit
     * dirs delete. A crash between the steps only duplicates surviving
     * entries (the scan distincts) or leaves entries naming dead files
-    * (which never match a scan again) — never resurrects a row. */
+    * (which never match a scan again) — never resurrects a row. When
+    * no entry names `files` the overlay stays as it is: re-committing
+    * other files' marks would look like fresh marks to a concurrent
+    * rewriter's [[requireNoNewMarks]] and abort it for nothing. */
   private[operators] def dropEntriesForFiles(
       spark: SparkSession, dir: String, files: Set[String]): Unit = {
     if (files.isEmpty) return
     val (fs, dirPath) = GraftFs.resolve(spark, dir)
     val commits = commitDirs(fs, dirPath)
     if (commits.isEmpty) return
-    // anti-join, not an IN literal: a wide rewrite can clear 10^4+
+    // a join, not an IN literal: a wide rewrite can clear 10^4+
     // files' entries in one commit. Overlay entries key by BASE name;
     // the replaced sidecar entries may be absolute shallow-clone
     // paths — normalize before matching.
     import spark.implicits._
-    val dv = spark.read.parquet(commits.map(_.toString): _*)
-      .join(files.map(GraftFs.baseName).toSeq.toDF("file"),
-        Seq("file"), "left_anti")
+    val all = spark.read.parquet(commits.map(_.toString): _*)
+      .join(files.map(GraftFs.baseName).toSeq.toDF("file")
+        .withColumn("__drop", lit(true)), Seq("file"), "left_outer")
       .distinct().persist()
     try {
-      if (dv.isEmpty) { GraftFs.deleteRecursive(fs, dvDir(dirPath)); () }
+      val counts = all.agg(count(col("__drop")),
+        count(when(col("__drop").isNull, lit(1)))).head()
+      val (dropped, kept) = (counts.getLong(0), counts.getLong(1))
+      val dv = all.filter(col("__drop").isNull).drop("__drop")
+      if (dropped == 0L) return
+      if (kept == 0L) { GraftFs.deleteRecursive(fs, dvDir(dirPath)); () }
       else {
         val commit = new HPath(dvDir(dirPath),
           s"dv-${System.currentTimeMillis()}-${java.util.UUID.randomUUID()}")
         dv.write.option("compression", "zstd").parquet(commit.toString)
         commits.foreach(c => GraftFs.deleteRecursive(fs, c))
       }
-    } finally { dv.unpersist(); () }
+    } finally { all.unpersist(); () }
   }
 
   private def loadDv(
@@ -377,15 +385,16 @@ object DeletionVectors {
   }
 
   /** Fold pending vectors into the data: rewrite ONLY the files that
-    * carry marked rows (dropping those rows), swap the sidecar once,
-    * and remove the overlay. `retain = true` archives the outgoing
-    * generation like every maintenance op. */
+    * carry marked rows (dropping those rows), swap the sidecar once
+    * (rebasing over a concurrent commit on other files), and remove
+    * the overlay. `retain = true` archives the outgoing generation
+    * like every maintenance op. */
   def materialize(
       spark: SparkSession, dir: String, retain: Boolean = false):
       Maintenance.Report = {
-    val m = Sidecar.load(spark, dir)
     val (fs, dirPath) = GraftFs.resolve(spark, dir)
     val loadedFp = Maintenance.metaFingerprint(spark, dirPath)
+    val m = Sidecar.load(spark, dir)
     // pin the commit dirs this fold covers: the final cleanup deletes
     // ONLY these, so a DV commit landing mid-materialize (on an
     // untouched file) survives instead of being wiped with the dir
@@ -400,21 +409,17 @@ object DeletionVectors {
       // marks key by BASE name; a shallow clone's entries are
       // absolute paths whose base names are the shared identity
       val affected = m.files.indices
-        .filter(p => affectedNames(GraftFs.baseName(m.files(p)))).toArray
+        .filter(p => affectedNames(GraftFs.baseName(m.files(p))))
       def pathOf(p: Int): String = new HPath(dirPath, m.files(p)).toString
-      val newNameOf: Map[Int, String] = affected.zipWithIndex.map {
-        case (p, j) => p -> Sidecar.partitionFileName(
-          m.maxPartitionIndex + 1 + j)
-      }.toMap
       // input_file_name() cannot sit above the anti join (multi
       // source); the carried full metadata path routes instead.
-      // __part carries the DENSE ordinal within `affected` (the
-      // updateWhere/merge pattern), so the scatter shuffles at
-      // affected.length — materializing DVs that touch 2 files of a
-      // 10^5-file table pays 2 write tasks, not 10^5.
+      // __part carries the DENSE ordinal within `affected`, so the
+      // scatter shuffles at affected.length — materializing DVs that
+      // touch 2 files of a 10^5-file table pays 2 write tasks, not
+      // 10^5.
       val partOf = new FileOrdinal(affected.zipWithIndex.map {
         case (p, j) => Stats.normalizePath(pathOf(p)) -> j }.toMap)
-      val kept = m.readData(spark, affected.map(pathOf).toIndexedSeq)
+      val kept = m.readData(spark, affected.map(pathOf))
         .withColumn("__path", col("_metadata.file_path"))
         .withColumn("__file", fileNameOf(col("__path")))
         .withColumn("__pos", col("_metadata.row_index"))
@@ -423,70 +428,26 @@ object DeletionVectors {
           "left_anti")
         .withColumn("__part", FileOrdinalExpr.ordinal(col("__path"), partOf))
         .drop("__path", "__file", "__pos")
-      val stage = GraftFs.mkStageDir(fs,
-        Option(dirPath.getParent).getOrElse(dirPath), ".graft-dvmat-",
-        dirPath.getName)
-      val written =
-        try ScatterWrite.partFiles(spark, kept, affected.length, fs,
-          dirPath, stage, j => newNameOf(affected(j)),
-          orderCols = m.indexColumns.toSeq, dropOrderCols = false,
-          renames = m.columnRenames)
-        finally GraftFs.deleteRecursive(fs, stage)
-      // dense ordinals back to original partition positions
-      val writtenSet = written.map { case (j, _) => affected(j) }.toSet
-      val statsByPath =
-        if (writtenSet.isEmpty) Map.empty[String, Stats.PartStats]
-        else Stats.forFiles(spark,
-          affected.filter(writtenSet)
-            .map(p => new HPath(dirPath, newNameOf(p)).toString)
-            .toIndexedSeq,
-          m.indexColumns.map(m.physicalName), Some(m.physicalSchema))
-      val affectedSet = affected.toSet
-      val entries = m.files.indices.flatMap { p =>
-        if (!affectedSet(p))
-          Some((m.files(p), m.sizes(p), m.lowerBounds(p), m.upperBounds(p)))
-        else if (writtenSet(p)) {
-          val st = statsByPath(Stats.normalizePath(
-            new HPath(dirPath, newNameOf(p)).toString))
-          Some((newNameOf(p), st.size, st.lb, st.ub))
-        } else None // every row of the file was marked: drop it
-      }
-      // abort (deleting this op's orphan files) if a concurrent DV
-      // DELETE marked rows in a file this fold rewrote — the rewrite
-      // copied those rows, so committing would resurrect them
-      try {
-        requireNoNewMarks(spark, dir,
-          commitsAtLoad.map(_.getName).toSet, affectedNames,
-          "materialize")
-        Maintenance.guardUnchanged(spark, dirPath, loadedFp)
-      } catch {
-        case e: Throwable =>
-          affected.foreach { p =>
-            try { fs.delete(new HPath(dirPath, newNameOf(p)), false); () }
-            catch { case _: java.io.IOException => () }
-          }
-          throw e
-      }
-      if (retain) Maintenance.archiveCurrent(spark, fs, dirPath)
-      Sidecar.write(spark, dir, m.indexColumns, entries.map(_._1),
-        entries.map(_._2), entries.map(_._3), entries.map(_._4),
-        m.maxPartitionIndex + affected.length, m.schema,
-        extras = m.extras)
-      if (!retain)
-        Maintenance.deletableNow(spark, dir, affected.map(m.files).toSeq)
-          .foreach(f => fs.delete(new HPath(dirPath, f), false))
+      // The shared row-level commit: OCC rebase over a concurrent
+      // disjoint commit, and an abort (a concurrent DV DELETE marked
+      // rows in a file this fold rewrote) that deletes only this op's
+      // unregistered files. Marks naming files no longer in the
+      // sidecar fold into nothing: no rewrite, only the cleanup.
+      val writtenSet =
+        if (affected.isEmpty) Set.empty[Int]
+        else Maintenance.rewriteAffected(spark, dir, fs, dirPath, m,
+          loadedFp, affected, kept, retain, "materialize",
+          commitsAtLoad.map(_.getName).toSet, ".graft-dvmat-",
+          mayEmpty = true)
       // delete only the commits this fold covered; drop the dir
       // itself only when nothing new landed meanwhile
       commitsAtLoad.foreach(c => GraftFs.deleteRecursive(fs, c))
       if (commitDirs(fs, dirPath).isEmpty) {
         GraftFs.deleteRecursive(fs, dvDir(dirPath)); ()
       }
-      // the rewritten files got fresh names: extend the Bloom /
-      // column-stats sidecars to them like every maintenance op
-      Maintenance.refreshBloom(spark, dir)
-      Maintenance.Report(rewritten = written.length,
-        dropped = affected.length - written.length, merged = 0,
-        created = written.length,
+      Maintenance.Report(rewritten = writtenSet.size,
+        dropped = affected.length - writtenSet.size, merged = 0,
+        created = writtenSet.size,
         untouched = m.files.length - affected.length)
     } finally { dv.unpersist(); () }
   }

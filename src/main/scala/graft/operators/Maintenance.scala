@@ -669,6 +669,11 @@ object Maintenance {
           "no changes were installed — reload and re-run")
   }
 
+  /** Test seam: runs after a row-level op's data rewrite is durable
+    * but before its sidecar install — the window a concurrent commit
+    * can land in. No-op in production. */
+  private[graft] var beforeRowLevelInstall: () => Unit = () => ()
+
   /** Install a row-level rewrite's sidecar with bounded OCC
     * rebase-and-retry: the expensive part — the data rewrite — is
     * already durable, and a concurrent commit that touched neither
@@ -682,11 +687,6 @@ object Maintenance {
     * (the Delta concurrent-delete-read case), collided on an output
     * name, or changed the schema/index/rename mapping this rewrite
     * was planned against. */
-  /** Test seam: runs after a row-level op's data rewrite is durable
-    * but before its sidecar install — the window a concurrent commit
-    * can land in. No-op in production. */
-  private[graft] var beforeRowLevelInstall: () => Unit = () => ()
-
   private def installRowLevelCommit(
       spark: SparkSession,
       dir: String,
@@ -703,9 +703,10 @@ object Maintenance {
     // On a terminal abort, this op's written-but-never-registered
     // files are orphans: remove them so the loser leaves no debris.
     // NEVER delete a name the COMMITTED generation references — on an
-    // output-name collision (both writers passed the noClobber exists
-    // probe before either moved) the winner's registered file carries
-    // that name, and deleting it would turn the race into data loss.
+    // output-name collision (both writers passed the scatter write's
+    // exists probe before either moved) the winner's registered file
+    // carries that name, and deleting it would turn the race into
+    // data loss.
     // Collided orphan bytes (if this op's move lost) are left for
     // vacuum/operator recovery.
     def abortCleanup(preserve: Set[String]): Unit =
@@ -786,6 +787,80 @@ object Maintenance {
           cur = m2
       }
     }
+  }
+
+  /** The copy-on-write commit every 1:1 row-level rewrite shares
+    * ([[updateWhere]] and its index-assignment form, [[replaceWhere]],
+    * the keyed merges, [[DeletionVectors.materialize]]): each file at
+    * a position in `affected` is replaced by at most one new file.
+    *
+    * `tagged` holds the rewritten rows with an int `__part` column
+    * carrying the DENSE ordinal of the row's target within
+    * `affected` (0 until affected.length), so the one scatter job
+    * shuffles at the affected width, not the table's file count.
+    * Rows are re-sorted on the index and written under PHYSICAL
+    * column names. New files take the slots after
+    * `m.maxPartitionIndex`, but never overwrite a taken slot: a
+    * concurrent committer's file keeps its name and this write lands
+    * under a disambiguated one, which is what gets registered.
+    *
+    * Steps, in order: scatter write, one stats job over the written
+    * files, the OCC install ([[installRowLevelCommit]]), deleting the
+    * replaced files no archived generation references, and extending
+    * the Bloom / column-stats sidecars. Returns the positions that
+    * were written. An affected file that received no rows drops from
+    * the sidecar; unless `mayEmpty` says the caller's op can empty a
+    * file, that aborts before anything installs. Callers own building
+    * `tagged`, deletion-vector cleanup and their [[Report]]. */
+  private[operators] def rewriteAffected(
+      spark: SparkSession,
+      dir: String,
+      fs: org.apache.hadoop.fs.FileSystem,
+      dirPath: HPath,
+      m: Sidecar.Meta,
+      loadedFp: (Long, Long),
+      affected: IndexedSeq[Int],
+      tagged: DataFrame,
+      retain: Boolean,
+      op: String,
+      dvSnap: Set[String],
+      stagePrefix: String,
+      mayEmpty: Boolean): Set[Int] = {
+    val stage = GraftFs.mkStageDir(fs,
+      Option(dirPath.getParent).getOrElse(dirPath), stagePrefix,
+      dirPath.getName)
+    val written =
+      try ScatterWrite.partFiles(spark, tagged, affected.length, fs,
+        dirPath, stage,
+        j => Sidecar.partitionFileName(m.maxPartitionIndex + 1 + j),
+        orderCols = m.indexColumns.toSeq, dropOrderCols = false,
+        renames = m.columnRenames)
+      finally GraftFs.deleteRecursive(fs, stage)
+    val stray = written.map(_._1).filterNot(affected.indices.contains)
+    require(stray.isEmpty, s"$op scatter wrote unexpected partitions $stray")
+    require(mayEmpty || written.length == affected.length,
+      s"$op scatter wrote ${written.length} partitions, " +
+        s"expected ${affected.length}")
+    // dense ordinals back to positions, under the ACTUAL written names
+    val nameByPos: Map[Int, String] =
+      written.map { case (j, n) => affected(j) -> n }.toMap
+    def pathOf(n: String): String = new HPath(dirPath, n).toString
+    val statsByPath = Stats.forFiles(spark, written.map(w => pathOf(w._2)),
+      m.indexColumns.map(m.physicalName), Some(m.physicalSchema))
+    val replacement: Map[String, Option[(String, Long, Bound, Bound)]] =
+      affected.map { p =>
+        m.files(p) -> nameByPos.get(p).map { n =>
+          val st = statsByPath(Stats.normalizePath(pathOf(n)))
+          (n, st.size, st.lb, st.ub)
+        }
+      }.toMap
+    installRowLevelCommit(spark, dir, fs, dirPath, m, loadedFp,
+      replacement, retain, op, dvSnap)
+    if (!retain)
+      deletableNow(spark, dir, affected.map(m.files))
+        .foreach(f => fs.delete(new HPath(dirPath, f), false))
+    refreshBloom(spark, dir)
+    nameByPos.keySet
   }
 
   /** Keep the Bloom and column-stats sidecars effective across
@@ -1251,21 +1326,6 @@ object Maintenance {
       extras = m.extras)
   }
 
-  /** Widen column types — METADATA-ONLY, zero data I/O at any table
-    * size (the Delta 4 type-widening idea). Spark 4's parquet readers
-    * natively promote a file's narrower physical type to the declared
-    * read schema (int32→int64, float→double, decimal precision
-    * growth), so existing files need no rewrite: the sidecar schema
-    * changes, reads serve the wider type everywhere, and subsequent
-    * appends write the wider physical type (mixed file widths are
-    * fine per-file). Index-column BOUNDS re-type with the column —
-    * routing and pruning compare stored bound values against runtime
-    * values of the NEW type, and a stale Int bound against a Long
-    * probe would miscompare. Value-typed derived sidecars (bloom,
-    * column stats) drop their affected entries instead (rebuilt
-    * lazily by their update() paths). Only safe widenings qualify:
-    * integral up-casts, float→double, decimal growth that loses no
-    * digits; anything else refuses loudly. */
   /** Whether `from -> to` is a parquet-level safe widening: Spark
     * 4's parquet readers serve a file's narrower physical type as
     * the declared wider read type for exactly these promotions, so
@@ -1291,6 +1351,21 @@ object Maintenance {
     }
   }
 
+  /** Widen column types — METADATA-ONLY, zero data I/O at any table
+    * size (the Delta 4 type-widening idea). Spark 4's parquet readers
+    * natively promote a file's narrower physical type to the declared
+    * read schema (int32→int64, float→double, decimal precision
+    * growth), so existing files need no rewrite: the sidecar schema
+    * changes, reads serve the wider type everywhere, and subsequent
+    * appends write the wider physical type (mixed file widths are
+    * fine per-file). Index-column BOUNDS re-type with the column —
+    * routing and pruning compare stored bound values against runtime
+    * values of the NEW type, and a stale Int bound against a Long
+    * probe would miscompare. Value-typed derived sidecars (bloom,
+    * column stats) drop their affected entries instead (rebuilt
+    * lazily by their update() paths). Only safe widenings qualify:
+    * integral up-casts, float→double, decimal growth that loses no
+    * digits; anything else refuses loudly. */
   def widenColumns(
       spark: SparkSession,
       dir: String,
@@ -1599,46 +1674,51 @@ object Maintenance {
       org.apache.spark.sql.internal.SQLConf.get.filesMaxPartitionBytes
     val singleSplit = GraftFs.fileSizes(GraftFs.conf(spark), memberFiles)
       .forall(_._2 <= maxSplit)
-    if (singleSplit && merges.length >= PDataset.scatterWriteThreshold) {
-      // One job for ALL groups: tag each row with its group ordinal
-      // (file → group, a driver-built map riding along as one
-      // reference object) and a global order key (member rank within
-      // the run × the task-local row ordinal — exact because each
-      // member is one split, hence one task), shuffle once, sink all
-      // merged files in parallel.
-      val groupOf = new FileOrdinal(merges.zipWithIndex.flatMap {
-        case (g, gi) => g.map(p => Stats.normalizePath(pathOf(p)) -> gi)
-      }.toMap)
-      val rankOf = new FileOrdinal(merges.flatten.zipWithIndex.map {
-        case (p, r) => Stats.normalizePath(pathOf(p)) -> r
-      }.toMap)
-      val stage = GraftFs.mkStageDir(fs,
-        Option(dirPath.getParent).getOrElse(dirPath), ".graft-compact-",
-        dirPath.getName)
-      try {
-        val tagged = m.readData(spark, memberFiles)
-          .withColumn("__part",
-            FileOrdinalExpr.ordinal(input_file_name(), groupOf))
-          .withColumn("__ord",
-            shiftleft(FileOrdinalExpr.ordinal(input_file_name(), rankOf)
-              .cast("long"), 33) +
-              monotonically_increasing_id().bitwiseAND(lit((1L << 33) - 1)))
-        ScatterWrite.partFiles(spark, tagged, merges.length, fs, dirPath,
-          stage, i => newNameOfGroup(i), orderCols = Seq("__ord"),
-          renames = m.columnRenames)
-      } finally GraftFs.deleteRecursive(fs, stage)
-    } else {
-      implicit val ec: ExecutionContext = PDataset.writeEc
-      val writes = merges.zipWithIndex.map { case (g, gi) =>
-        Future {
-          val df = g.map(p => m.readData(spark, Seq(pathOf(p))))
-            .reduceLeft(_.union(_))
-          Sidecar.writeSingleParquet(m.toPhysical(df),
-            new HPath(dirPath, newNameOfGroup(gi)).toString)
+    // the name each merged group was written under
+    val nameOfGroup: Map[Int, String] =
+      if (singleSplit && merges.length >= PDataset.scatterWriteThreshold) {
+        // One job for ALL groups: tag each row with its group ordinal
+        // (file → group, a driver-built map riding along as one
+        // reference object) and a global order key (member rank within
+        // the run × the task-local row ordinal — exact because each
+        // member is one split, hence one task), shuffle once, sink all
+        // merged files in parallel.
+        val groupOf = new FileOrdinal(merges.zipWithIndex.flatMap {
+          case (g, gi) => g.map(p => Stats.normalizePath(pathOf(p)) -> gi)
+        }.toMap)
+        val rankOf = new FileOrdinal(merges.flatten.zipWithIndex.map {
+          case (p, r) => Stats.normalizePath(pathOf(p)) -> r
+        }.toMap)
+        val stage = GraftFs.mkStageDir(fs,
+          Option(dirPath.getParent).getOrElse(dirPath), ".graft-compact-",
+          dirPath.getName)
+        try {
+          val tagged = m.readData(spark, memberFiles)
+            .withColumn("__part",
+              FileOrdinalExpr.ordinal(input_file_name(), groupOf))
+            .withColumn("__ord",
+              shiftleft(FileOrdinalExpr.ordinal(input_file_name(), rankOf)
+                .cast("long"), 33) +
+                monotonically_increasing_id().bitwiseAND(lit((1L << 33) - 1)))
+          // a slot a concurrent committer took lands under a
+          // disambiguated name: register what was actually written
+          ScatterWrite.partFiles(spark, tagged, merges.length, fs, dirPath,
+            stage, newNameOfGroup, orderCols = Seq("__ord"),
+            renames = m.columnRenames).toMap
+        } finally GraftFs.deleteRecursive(fs, stage)
+      } else {
+        implicit val ec: ExecutionContext = PDataset.writeEc
+        val writes = merges.zipWithIndex.map { case (g, gi) =>
+          Future {
+            val df = g.map(p => m.readData(spark, Seq(pathOf(p))))
+              .reduceLeft(_.union(_))
+            Sidecar.writeSingleParquet(m.toPhysical(df),
+              new HPath(dirPath, newNameOfGroup(gi)).toString)
+          }
         }
+        writes.foreach(Await.result(_, SDuration.Inf))
+        newNameOfGroup
       }
-      writes.foreach(Await.result(_, SDuration.Inf))
-    }
 
     // New sidecar in partition order: singleton runs keep their
     // entry; merged runs collapse to one exact-from-metadata entry.
@@ -1649,7 +1729,7 @@ object Maintenance {
         (m.files(p), m.sizes(p), m.lowerBounds(p), m.upperBounds(p))
       } else {
         gi += 1
-        (newNameOfGroup(gi),
+        (nameOfGroup(gi),
           g.map(m.sizes).sum,
           g.map(m.lowerBounds).min(Lex.boundOrdering),
           g.map(m.upperBounds).max(Lex.boundOrdering))
@@ -1817,29 +1897,6 @@ object Maintenance {
 
   // ---- predicate update (SQL UPDATE) ----
 
-  /** Update every stored row matching `cond`: each assigned column
-    * takes its assignment expression's value (cast to the column
-    * type), every other column passes through — `UPDATE t SET c = e
-    * WHERE p` semantics, served COPY-ON-WRITE at file granularity. A
-    * row where `cond` is NULL is NOT updated (three-valued SQL
-    * WHERE).
-    *
-    * Scale shape: candidate files come from the read path's own
-    * sidecar pruning walk ([[DeletionVectors.pruneByPredicate]] —
-    * lex bounds on every index column, per-file column stats, Bloom
-    * filters; zero data read), ONE pushed-down discovery scan over
-    * just the candidates finds the files with actual hits (driver
-    * collect bounded by #files), and only those files are rewritten —
-    * ONE scatter job over the affected partitions, exact stats
-    * recomputed in one more job.
-    * A point update on a clustered key rewrites one file at any
-    * table size. Assignments MAY target index columns (per-file
-    * bounds are recomputed and the file re-sorted); note such an
-    * update can make partition bounds overlap, which keyed
-    * maintenance will refuse until a `repartition` restores
-    * disjointness. CHECK constraints validate the post-update rows
-    * in one aggregate over the hit files only.
-    */
   /** Names of the files that actually hold rows matching `cond`:
     * the read path's sidecar pruning walk narrows to candidates
     * (lex bounds, column stats, Blooms — zero data read), then ONE
@@ -1900,6 +1957,29 @@ object Maintenance {
         "disagree)")
   }
 
+  /** Update every stored row matching `cond`: each assigned column
+    * takes its assignment expression's value (cast to the column
+    * type), every other column passes through — `UPDATE t SET c = e
+    * WHERE p` semantics, served COPY-ON-WRITE at file granularity. A
+    * row where `cond` is NULL is NOT updated (three-valued SQL
+    * WHERE).
+    *
+    * Scale shape: candidate files come from the read path's own
+    * sidecar pruning walk ([[DeletionVectors.pruneByPredicate]] —
+    * lex bounds on every index column, per-file column stats, Bloom
+    * filters; zero data read), ONE pushed-down discovery scan over
+    * just the candidates finds the files with actual hits (driver
+    * collect bounded by #files), and only those files are rewritten —
+    * ONE scatter job over the affected partitions, exact stats
+    * recomputed in one more job.
+    * A point update on a clustered key rewrites one file at any
+    * table size. Assignments MAY target index columns (per-file
+    * bounds are recomputed and the file re-sorted); note such an
+    * update can make partition bounds overlap, which keyed
+    * maintenance will refuse until a `repartition` restores
+    * disjointness. CHECK constraints validate the post-update rows
+    * in one aggregate over the hit files only.
+    */
   def updateWhere(
       spark: SparkSession,
       dir: String,
@@ -1963,17 +2043,13 @@ object Maintenance {
         affected.toIndexedSeq, retain, fs, dirPath, loadedFp, dvOpt,
         dvSnap)
 
-    val newNameOf: Map[Int, String] = affected.zipWithIndex.map {
-      case (p, j) =>
-        p -> Sidecar.partitionFileName(m.maxPartitionIndex + 1 + j)
-    }.toMap
     // ONE scatter job rewrites every affected partition (the shared
     // mechanism merge/replaceWhere use — a wide UPDATE over 10^4
     // files is one Spark job, not 10^4), each partition re-sorted on
     // the index (an index-column assignment may reorder rows).
-    // __part carries the DENSE ordinal within `affected` (compact's
-    // pattern), so the shuffle width is affected.length — a 2-file
-    // UPDATE on a 10^5-file table pays 2 write tasks, not 10^5.
+    // __part carries the DENSE ordinal within `affected`, so the
+    // shuffle width is affected.length — a 2-file UPDATE on a
+    // 10^5-file table pays 2 write tasks, not 10^5.
     val partOf = new FileOrdinal(affected.zipWithIndex.map {
       case (p, j) => Stats.normalizePath(pathOf(p)) -> j }.toMap)
     val updated0 = m.readData(spark, affected.map(pathOf))
@@ -1981,54 +2057,16 @@ object Maintenance {
         FileOrdinalExpr.ordinal(input_file_name(), partOf))
     val updated = dvOpt.fold(updated0)(DeletionVectors.minus(updated0, _))
       .select(updatedCols :+ col("__part"): _*)
-    val stage = GraftFs.mkStageDir(fs,
-      Option(dirPath.getParent).getOrElse(dirPath), ".graft-update-",
-        dirPath.getName)
-    val written =
-      try ScatterWrite.partFiles(spark, updated, affected.length, fs,
-        dirPath, stage, j => newNameOf(affected(j)),
-        orderCols = m.indexColumns.toSeq, dropOrderCols = false,
-        renames = m.columnRenames, noClobber = true)
-      finally GraftFs.deleteRecursive(fs, stage)
-    require(written.map(_._1).forall(affected.indices.contains),
-      s"updateWhere scatter wrote unexpected partitions " +
-        s"${written.map(_._1).filterNot(affected.indices.contains)}")
-    // ACTUAL names (collision-disambiguated under concurrency)
-    val nameByPos: Map[Int, String] =
-      written.map { case (j, n) => affected(j) -> n }.toMap
-    val writtenSet = nameByPos.keySet
     // a file whose every live row was already DV-deleted writes
     // nothing and drops from the sidecar (possible only with a
     // folded overlay — plain updates keep every row)
-    require(dvOpt.isDefined || writtenSet.size == affected.length,
-      s"updateWhere scatter wrote ${written.length} partitions, " +
-        s"expected ${affected.length}")
-    val droppedPos = affected.filterNot(writtenSet)
-
-    // Exact stats for just the rewritten files (one job).
-    val statsByPath =
-      if (writtenSet.isEmpty) Map.empty[String, Stats.PartStats]
-      else Stats.forFiles(spark,
-        affected.filter(writtenSet)
-          .map(p => new HPath(dirPath, nameByPos(p)).toString),
-        m.indexColumns.map(m.physicalName), Some(m.physicalSchema))
-    val replacement: Map[String, Option[(String, Long, Bound, Bound)]] =
-      affected.map { p =>
-        m.files(p) -> nameByPos.get(p).map { n =>
-          val st = statsByPath(Stats.normalizePath(
-            new HPath(dirPath, n).toString))
-          (n, st.size, st.lb, st.ub)
-        }
-      }.toMap
-    installRowLevelCommit(spark, dir, fs, dirPath, m, loadedFp,
-      replacement, retain, "updateWhere", dvSnap)
-    if (!retain)
-      deletableNow(spark, dir, affected.map(m.files))
-        .foreach(f => fs.delete(new HPath(dirPath, f), false))
+    val writtenSet = rewriteAffected(spark, dir, fs, dirPath, m, loadedFp,
+      affected, updated, retain, "updateWhere", dvSnap, ".graft-update-",
+      mayEmpty = dvOpt.isDefined)
     DeletionVectors.dropEntriesForFiles(spark, dir,
       affected.map(m.files).toSet)
-    refreshBloom(spark, dir)
-    Report(rewritten = writtenSet.size, dropped = droppedPos.length,
+    Report(rewritten = writtenSet.size,
+      dropped = affected.length - writtenSet.size,
       merged = 0, created = writtenSet.size,
       untouched = m.files.length - affected.length)
   }
@@ -2090,7 +2128,6 @@ object Maintenance {
         .agg(collect_set(col("__dest"))).head().getSeq[Int](0)
       val affected =
         (srcAffected ++ destSet).distinct.sorted.toIndexedSeq
-      val affectedSet = affected.toSet
       val srcSet = srcAffected.toSet
       val destOnly = affected.filterNot(srcSet)
 
@@ -2111,96 +2148,23 @@ object Maintenance {
       // Dense scatter tags (ordinal within `affected`, the shared
       // pattern): shuffle width = affected file count.
       val denseOf: Map[Int, Int] = affected.zipWithIndex.toMap
-      val newNameOf: Map[Int, String] = affected.zipWithIndex.map {
-        case (p, j) =>
-          p -> Sidecar.partitionFileName(m.maxPartitionIndex + 1 + j)
-      }.toMap
       val tagged = combined.withColumn("__part",
         element_at(typedLit(denseOf), col("__dest"))).drop("__dest")
-
-      val stage = GraftFs.mkStageDir(fs,
-        Option(dirPath.getParent).getOrElse(dirPath), ".graft-update-",
-        dirPath.getName)
-      val writtenDense =
-        try ScatterWrite.partFiles(spark, tagged, affected.length, fs,
-          dirPath, stage, j => newNameOf(affected(j)),
-          orderCols = keyCols, dropOrderCols = false,
-          renames = m.columnRenames, noClobber = true)
-        finally GraftFs.deleteRecursive(fs, stage)
-      require(writtenDense.forall(w =>
-        w._1 >= 0 && w._1 < affected.length),
-        s"rekey update scatter wrote unexpected partitions " +
-          s"${writtenDense.map(_._1).filterNot(affected.indices.contains)}")
-      val nameByPos: Map[Int, String] =
-        writtenDense.map { case (j, n) => affected(j) -> n }.toMap
-      val writtenSet = nameByPos.keySet
       // A source file whose every row moved away writes nothing and
       // drops from the sidecar.
-      val droppedPos = affected.filterNot(writtenSet)
-
-      val statsByPath =
-        if (writtenSet.isEmpty) Map.empty[String, Stats.PartStats]
-        else Stats.forFiles(spark,
-          affected.filter(writtenSet)
-            .map(p => new HPath(dirPath, nameByPos(p)).toString),
-          m.indexColumns.map(m.physicalName), Some(m.physicalSchema))
-      val replacement
-          : Map[String, Option[(String, Long, Bound, Bound)]] =
-        affected.map { p =>
-          m.files(p) -> nameByPos.get(p).map { n =>
-            val st = statsByPath(Stats.normalizePath(
-              new HPath(dirPath, n).toString))
-            (n, st.size, st.lb, st.ub)
-          }
-        }.toMap
-      installRowLevelCommit(spark, dir, fs, dirPath, m, loadedFp,
-        replacement, retain, "updateWhere (index assignment)", dvSnap)
-      if (!retain)
-        deletableNow(spark, dir, affected.map(m.files))
-          .foreach(f => fs.delete(new HPath(dirPath, f), false))
+      val writtenSet = rewriteAffected(spark, dir, fs, dirPath, m,
+        loadedFp, affected, tagged, retain,
+        "updateWhere (index assignment)", dvSnap, ".graft-update-",
+        mayEmpty = true)
       DeletionVectors.dropEntriesForFiles(spark, dir,
         affected.map(m.files).toSet)
-      refreshBloom(spark, dir)
-      Report(rewritten = writtenSet.size, dropped = droppedPos.length,
+      Report(rewritten = writtenSet.size,
+        dropped = affected.length - writtenSet.size,
         merged = 0, created = writtenSet.size,
         untouched = m.files.length - affected.length)
     } finally { routed.unpersist(); () }
   }
 
-  /** Delta-style `replaceWhere`: atomically replace the rows
-    * matching `cond` with `data` — `INSERT INTO t REPLACE WHERE p`
-    * / `df.writeTo(t).overwrite(p)` semantics, ONE sidecar commit.
-    * Every incoming row must itself satisfy `cond` (the Delta
-    * contract: an overwrite scoped to p may not smuggle rows outside
-    * p — refused in one aggregate over the delta).
-    *
-    * Scale shape: the files holding matching rows come from the read
-    * path's sidecar pruning + one pushed-down discovery scan (as
-    * [[updateWhere]]); those files are rewritten WITHOUT their
-    * matching rows (a file emptied entirely is dropped), the new
-    * data lands as index-sorted range-partitioned files beside them,
-    * and one metadata swap installs both — untouched files are never
-    * read. Replacing one day of a date-clustered 100 TB table costs
-    * O(that day), and a crash at any point leaves the previous
-    * generation readable. */
-  /** RESTORE the clustered layout: appends land as their own files
-    * whose index ranges overlap the existing ones, so after enough of
-    * them every range slice (division joins, SQL division rewrites,
-    * bucket equi-joins on a MinHash index) matches most of the table
-    * and pruning degrades to a full scan. One ranged shuffle re-sorts
-    * the LIVE rows (pending deletion vectors fold in) into disjoint
-    * range-partitioned files staged beside the table, and one atomic
-    * sidecar swap installs them — extras (constraints, txn ledgers,
-    * rename map) survive verbatim, history archives under `retain`,
-    * and the same OCC guards as the row-level ops abort on a
-    * concurrent commit or fresh DV mark. On a SHALLOW CLONE this
-    * LOCALIZES it: the rewrite writes clone-local files and only
-    * drops the external references — the source's bytes are never
-    * deleted. O(table) by definition — schedule it like OPTIMIZE,
-    * when OVERLAP (not file count, [[compact]]'s trigger) is the
-    * problem; file granularity is preserved (one output file per
-    * current file), so follow with [[compact]] if small files are
-    * also a problem. */
   /** The scheduling signal for [[recluster]]. `maxOverlap` is the
     * deepest point of the key space — how many files a point lookup
     * or range slice must touch there (1 = perfectly clustered; the
@@ -2234,6 +2198,24 @@ object Maintenance {
     LayoutHealth(n, maxD, disjoint = maxD <= 1)
   }
 
+  /** RESTORE the clustered layout: appends land as their own files
+    * whose index ranges overlap the existing ones, so after enough of
+    * them every range slice (division joins, SQL division rewrites,
+    * bucket equi-joins on a MinHash index) matches most of the table
+    * and pruning degrades to a full scan. One ranged shuffle re-sorts
+    * the LIVE rows (pending deletion vectors fold in) into disjoint
+    * range-partitioned files staged beside the table, and one atomic
+    * sidecar swap installs them — extras (constraints, txn ledgers,
+    * rename map) survive verbatim, history archives under `retain`,
+    * and the same OCC guards as the row-level ops abort on a
+    * concurrent commit or fresh DV mark. On a SHALLOW CLONE this
+    * LOCALIZES it: the rewrite writes clone-local files and only
+    * drops the external references — the source's bytes are never
+    * deleted. O(table) by definition — schedule it like OPTIMIZE,
+    * when OVERLAP (not file count, [[compact]]'s trigger) is the
+    * problem; file granularity is preserved (one output file per
+    * current file), so follow with [[compact]] if small files are
+    * also a problem. */
   def recluster(
       spark: SparkSession,
       dir: String,
@@ -2291,8 +2273,7 @@ object Maintenance {
         else DivisionRouter.route(keyCols.map(col), cuts))
       val writtenDense = ScatterWrite.partFiles(spark, tagged, gOut, fs,
         dirPath, stage, newNameOf, orderCols = keyCols,
-        dropOrderCols = false, renames = m.columnRenames,
-        noClobber = true)
+        dropOrderCols = false, renames = m.columnRenames)
       val newNames = writtenDense.sortBy(_._1).map(_._2)
       val statsByPath = Stats.forFiles(spark,
         newNames.map(n => new HPath(dirPath, n).toString),
@@ -2324,6 +2305,22 @@ object Maintenance {
     } finally GraftFs.deleteRecursive(fs, stage)
   }
 
+  /** Delta-style `replaceWhere`: atomically replace the rows
+    * matching `cond` with `data` — `INSERT INTO t REPLACE WHERE p`
+    * / `df.writeTo(t).overwrite(p)` semantics, ONE sidecar commit.
+    * Every incoming row must itself satisfy `cond` (the Delta
+    * contract: an overwrite scoped to p may not smuggle rows outside
+    * p — refused in one aggregate over the delta).
+    *
+    * Scale shape: the files holding matching rows come from the read
+    * path's sidecar pruning + one pushed-down discovery scan (as
+    * [[updateWhere]]); those files are rewritten WITHOUT their
+    * matching rows (a file emptied entirely is dropped), the new
+    * data lands as index-sorted range-partitioned files beside them,
+    * and one metadata swap installs both — untouched files are never
+    * read. Replacing one day of a date-clustered 100 TB table costs
+    * O(that day), and a crash at any point leaves the previous
+    * generation readable. */
   def replaceWhere(
       spark: SparkSession,
       dir: String,
@@ -2397,15 +2394,9 @@ object Maintenance {
         .collect().map(_.getInt(0))
       val affected = (m.files.indices
         .filter(i => hitNames(GraftFs.baseName(m.files(i))))
-        ++ insertParts).distinct.sorted.toArray
+        ++ insertParts).distinct.sorted
       if (affected.isEmpty)
         return Report(0, 0, 0, 0, m.files.length)
-      val affectedSet = affected.toSet
-      val newNameOf: Map[Int, String] = affected.zipWithIndex.map {
-        case (p, j) =>
-          p -> Sidecar.partitionFileName(m.maxPartitionIndex + 1 + j)
-      }.toMap
-
       val survives = !coalesce(cond, lit(false))
       // Dense scatter tags (ordinal within `affected`, compact's
       // pattern): the rewrite shuffles at width affected.length, not
@@ -2425,51 +2416,15 @@ object Maintenance {
       val combined = survivors.unionByName(routed.withColumn("__part",
         element_at(typedLit(denseOf), col("__part"))))
 
-      val stage = GraftFs.mkStageDir(fs,
-        Option(dirPath.getParent).getOrElse(dirPath), ".graft-replace-",
-        dirPath.getName)
-      val writtenDense =
-        try ScatterWrite.partFiles(spark, combined, affected.length, fs,
-          dirPath, stage, j => newNameOf(affected(j)),
-          orderCols = keyCols, dropOrderCols = false,
-          renames = m.columnRenames, noClobber = true)
-        finally GraftFs.deleteRecursive(fs, stage)
-      require(writtenDense.forall(w => w._1 >= 0 && w._1 < affected.length),
-        s"replaceWhere scatter wrote unexpected partitions " +
-          s"${writtenDense.map(_._1).filterNot(affected.indices.contains)}")
-      val written = writtenDense.map { case (j, n) => (affected(j), n) }
-      val nameByPos: Map[Int, String] = written.toMap
-      val writtenSet = nameByPos.keySet
-
-      // Exact stats for just the rewritten files (one job); a
-      // partition the replace emptied entirely drops from the sidecar.
-      val statsByPath =
-        if (writtenSet.isEmpty) Map.empty[String, Stats.PartStats]
-        else Stats.forFiles(spark,
-          affected.filter(writtenSet)
-            .map(p => new HPath(dirPath, nameByPos(p)).toString)
-            .toIndexedSeq,
-          m.indexColumns.map(m.physicalName), Some(m.physicalSchema))
-      val replacement
-          : Map[String, Option[(String, Long, Bound, Bound)]] =
-        affected.map { p =>
-          m.files(p) -> nameByPos.get(p).map { n =>
-            val st = statsByPath(Stats.normalizePath(
-              new HPath(dirPath, n).toString))
-            (n, st.size, st.lb, st.ub)
-          }
-        }.toMap
-      installRowLevelCommit(spark, dir, fs, dirPath, m, loadedFp,
-        replacement, retain, "replaceWhere", dvSnap)
-      if (!retain)
-        deletableNow(spark, dir, affected.map(m.files).toSeq)
-          .foreach(f => fs.delete(new HPath(dirPath, f), false))
+      // a partition the replace emptied entirely drops from the sidecar
+      val writtenSet = rewriteAffected(spark, dir, fs, dirPath, m,
+        loadedFp, affected, combined, retain, "replaceWhere", dvSnap,
+        ".graft-replace-", mayEmpty = true)
       DeletionVectors.dropEntriesForFiles(spark, dir,
         affected.map(m.files).toSet)
-      refreshBloom(spark, dir)
-      Report(rewritten = written.length,
-        dropped = affected.length - written.length, merged = 0,
-        created = written.length,
+      Report(rewritten = writtenSet.size,
+        dropped = affected.length - writtenSet.size, merged = 0,
+        created = writtenSet.size,
         untouched = m.files.length - affected.length)
     } finally { aligned.unpersist(); () }
   }
@@ -2649,12 +2604,8 @@ object Maintenance {
     if (nUpd > 0L && nDel > 0L)
       require(v.getLong(4) + v.getLong(5) == v.getLong(6),
         "a key may not appear in both updates and deletes")
-    val affected = v.getSeq[Int](7).sorted.toArray
-    val affectedSet = affected.toSet
+    val affected = v.getSeq[Int](7).sorted.toIndexedSeq
     def pathOf(p: Int): String = new HPath(dirPath, m.files(p)).toString
-    val newNameOf: Map[Int, String] = affected.zipWithIndex.map {
-      case (p, j) => p -> Sidecar.partitionFileName(m.maxPartitionIndex + 1 + j)
-    }.toMap
 
     // Old rows of affected partitions, tagged with the DENSE ordinal
     // of their file within `affected` (compact's pattern): the
@@ -2665,7 +2616,7 @@ object Maintenance {
     val denseOf: Map[Int, Int] = affected.zipWithIndex.toMap
     val partOf = new FileOrdinal(affected.zipWithIndex.map {
       case (p, j) => Stats.normalizePath(pathOf(p)) -> j }.toMap)
-    val oldBase = m.readData(spark, affected.map(pathOf).toIndexedSeq)
+    val oldBase = m.readData(spark, affected.map(pathOf))
       .withColumn("__part",
         FileOrdinalExpr.ordinal(input_file_name(), partOf))
     val old = dvOpt.fold(oldBase)(DeletionVectors.minus(oldBase, _))
@@ -2688,54 +2639,16 @@ object Maintenance {
       .join(incomingDense.select(keyCols.map(col): _*), keyCols, "left_anti")
       .unionByName(incomingDense.filter(col("__op") === 1).drop("__op"))
 
-    val stage = GraftFs.mkStageDir(fs,
-      Option(dirPath.getParent).getOrElse(dirPath), ".graft-upsert-",
-        dirPath.getName)
-    val writtenDense =
-      try ScatterWrite.partFiles(spark, resolved, affected.length, fs,
-        dirPath, stage, j => newNameOf(affected(j)),
-        orderCols = keyCols, dropOrderCols = false,
-        renames = m.columnRenames, noClobber = true)
-      finally GraftFs.deleteRecursive(fs, stage)
-    require(writtenDense.forall(x => x._1 >= 0 && x._1 < affected.length),
-      s"merge scatter wrote unexpected partitions " +
-        s"${writtenDense.map(_._1).filterNot(affected.indices.contains)}")
-    val written = writtenDense.map { case (j, n) => (affected(j), n) }
-    val nameByPos: Map[Int, String] = written.toMap
-    val writtenSet = nameByPos.keySet
     // A partition every row of which was deleted writes nothing and
     // drops from the sidecar (possible only when deletes are present).
-    require(nDel > 0 || writtenSet == affectedSet,
-      s"upsert scatter wrote ${written.length} partitions, " +
-        s"expected ${affected.length}")
-    val droppedPos = affected.filterNot(writtenSet)
-
-    // Exact stats for just the rewritten files (one job).
-    val statsByPath =
-      if (writtenSet.isEmpty) Map.empty[String, Stats.PartStats]
-      else Stats.forFiles(spark,
-        affected.filter(writtenSet)
-          .map(p => new HPath(dirPath, nameByPos(p)).toString).toIndexedSeq,
-        m.indexColumns.map(m.physicalName), Some(m.physicalSchema))
-    val replacement
-        : Map[String, Option[(String, Long, Bound, Bound)]] =
-      affected.map { p =>
-        m.files(p) -> nameByPos.get(p).map { n =>
-          val st = statsByPath(Stats.normalizePath(
-            new HPath(dirPath, n).toString))
-          (n, st.size, st.lb, st.ub)
-        }
-      }.toMap
-    installRowLevelCommit(spark, dir, fs, dirPath, m, loadedFp,
-      replacement, retain, "keyed maintenance", dvSnap)
-    if (!retain)
-      deletableNow(spark, dir, affected.map(m.files).toSeq)
-        .foreach(f => fs.delete(new HPath(dirPath, f), false))
+    val writtenSet = rewriteAffected(spark, dir, fs, dirPath, m, loadedFp,
+      affected, resolved, retain, "keyed maintenance", dvSnap,
+      ".graft-upsert-", mayEmpty = nDel > 0)
     DeletionVectors.dropEntriesForFiles(spark, dir,
       affected.map(m.files).toSet)
-    refreshBloom(spark, dir)
-    Report(rewritten = written.length, dropped = droppedPos.length,
-      merged = 0, created = written.length,
+    Report(rewritten = writtenSet.size,
+      dropped = affected.length - writtenSet.size,
+      merged = 0, created = writtenSet.size,
       untouched = m.files.length - affected.length,
       upsertRows = nUpd, deleteRows = nDel)
   }

@@ -4,15 +4,16 @@ import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
 
 import graft.core.PDataset
-import graft.operators.Maintenance
+import graft.operators.{DeletionVectors, Maintenance}
 import Fixtures._
 
 /** Model-based randomized test of the maintenance subsystem: a
-  * fixed-seed sequence of upserts, range deletes, compactions,
-  * appends and vacuums runs against one dataset while a driver-side
-  * map tracks the expected content; after EVERY step the dataset
-  * must match the model exactly and keep its invariants (exact
-  * bounds/sizes, disjoint partitions). Sequences of interleaved ops
+  * fixed-seed sequence of upserts, range and key deletes, merges,
+  * updates, scoped overwrites, deletion-vector materializes,
+  * compactions, appends and vacuums runs against one dataset while a
+  * driver-side map tracks the expected content; after EVERY step the
+  * dataset must match the model exactly and keep its invariants
+  * (exact bounds/sizes, disjoint partitions). Sequences of interleaved ops
   * reach states no hand-written case does — e.g. compacting files
   * created by an upsert that followed a delete.
   */
@@ -45,7 +46,7 @@ class MaintenanceFuzzSpec extends AnyFunSuite {
     }
     // The fuzzed dataset is a ZERO-COPY CLONE of the seed: every op in
     // the mix first crosses the external-entry (absolute-path) code
-    // paths until its band localizes, and nothing in 26 random
+    // paths until its band localizes, and nothing in 28
     // mutations may touch a source byte — the copy-on-write contract
     // under the strongest interleaving we have.
     PDataset.concat(parts).writeParquet(srcDir)
@@ -110,10 +111,31 @@ class MaintenanceFuzzSpec extends AnyFunSuite {
 
     val landing = tempDir("maint-fuzz-landing")
 
-    (0 until 26).foreach { step =>
-      val op = rnd.nextInt(17)
+    // 26 random steps, then one forced step for each row-level rewrite
+    // the draw may miss: a DV delete folded in by materialize, and an
+    // update assigning the index column
+    val forced = Seq(17, 14)
+    (0 until 26 + forced.length).foreach { step =>
+      val op = if (step < 26) rnd.nextInt(17) else forced(step - 26)
       val label =
-        if (op == 16) { // whole-table recluster: layout only, rows
+        if (op == 17) { // merge-on-read delete, then materialize
+          val keys = model.keys.toVector
+          if (keys.length < 300) "skip"
+          else {
+            val a = keys(rnd.nextInt(keys.length))
+            val b = a + 1 + rnd.nextInt(150)
+            val retain = rnd.nextBoolean()
+            val before = model.toMap
+            model.rangeImpl(Some(a), Some(b)).keys.toVector
+              .foreach(model.remove)
+            DeletionVectors.deleteWhere(spark, dir,
+              col("k") >= a && col("k") < b)
+            DeletionVectors.materialize(spark, dir, retain = retain)
+            assert(!DeletionVectors.exists(spark, dir))
+            if (retain) checkFeed(before, s"materialize-feed($step)")
+            s"materialize($step, [$a,$b))"
+          }
+        } else if (op == 16) { // whole-table recluster: layout only, rows
           // unchanged; on the clone this LOCALIZES remaining external
           // references (the source-byte-identity check at the end
           // proves the source untouched)
@@ -325,7 +347,7 @@ class MaintenanceFuzzSpec extends AnyFunSuite {
     // final vacuum leaves exactly the referenced files on disk
     Maintenance.vacuum(spark, dir)
     check("final vacuum")
-    // the copy-on-write contract: 26 random mutations + vacuums on
+    // the copy-on-write contract: 28 mutations + vacuums on
     // the clone and the SOURCE table is byte-identical — same files,
     // same sizes, same mtimes, same content
     val srcAfter = {

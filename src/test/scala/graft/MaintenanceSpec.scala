@@ -205,6 +205,37 @@ class MaintenanceSpec extends AnyFunSuite {
     assertSameRows(after.toDF, keyedDF(0, 480))
   }
 
+  test("compact's one-job path never overwrites a file a concurrent " +
+      "committer holds at its new slot name") {
+    val dir = tempDir("maint-compact-slot") + "/ds"
+    writeKeyed(dir, 480, 10) // 48 small files
+    val m0 = Sidecar.load(spark, dir)
+    // a concurrent committer planned from the same maxPartitionIndex
+    // and already moved its file into compact's first new slot
+    val foreign = Paths.get(dir,
+      Sidecar.partitionFileName(m0.maxPartitionIndex + 1))
+    Files.write(foreign, "foreign committer bytes".getBytes("UTF-8"))
+    val mtime = java.nio.file.attribute.FileTime.fromMillis(1000000000000L)
+    Files.setLastModifiedTime(foreign, mtime)
+    val bytes = Files.readAllBytes(foreign)
+    val old = PDataset.scatterWriteThreshold
+    PDataset.scatterWriteThreshold = 4
+    try {
+      val report = Maintenance.compact(spark, dir, targetRows = 60)
+      assert(report.created == 8 && report.merged == 48, report.toString)
+    } finally PDataset.scatterWriteThreshold = old
+    assert(java.util.Arrays.equals(Files.readAllBytes(foreign), bytes),
+      "compact overwrote the foreign file")
+    assert(Files.getLastModifiedTime(foreign) == mtime)
+    val m1 = Sidecar.load(spark, dir)
+    assert(!m1.files.contains(foreign.getFileName.toString),
+      "compact registered the foreign file as its own")
+    assert(m1.files.forall(f => Files.exists(Paths.get(dir, f))))
+    val after = PDataset.scanParquet(spark, dir)
+    checkBoundsAndSizes(after)
+    assertSameRows(after.toDF, keyedDF(0, 480))
+  }
+
   test("compact works on an index-less (row-mode) dataset") {
     val dir = tempDir("maint-compact-rowmode") + "/ds"
     val parts = (0 until 200 by 20).map(lo =>
@@ -1334,6 +1365,43 @@ class MaintenanceSpec extends AnyFunSuite {
     assert(live2.filter(col("k") === 150L).isEmpty,
       "the untouched-file mark must survive the rewrite's compaction")
     assert(live2.filter(col("k") === 25L).head().getString(2) == "UPD")
+  }
+
+  test("materialize rebases over a concurrent upsert on an untouched " +
+      "file: both changes survive") {
+    import graft.operators.DeletionVectors
+    val dir = tempDir("maint-occ-dvmat") + "/ds"
+    writeKeyed(dir, 200, 50) // 4 files: 0-49, 50-99, 100-149, 150-199
+    DeletionVectors.deleteKeys(spark, dir, Seq(30L).toDF("k"))
+    // the upsert commits between materialize's durable rewrite of file
+    // 0 and its sidecar install, from the same maxPartitionIndex
+    Maintenance.beforeRowLevelInstall = () => {
+      Maintenance.beforeRowLevelInstall = () => ()
+      Maintenance.upsert(spark, dir,
+        Seq((150L, 3, "other")).toDF("k", "grp", "payload"))
+      ()
+    }
+    try {
+      val r = DeletionVectors.materialize(spark, dir)
+      assert(r.rewritten == 1 && r.untouched == 3, r.toString)
+    } finally Maintenance.beforeRowLevelInstall = () => ()
+    assert(!DeletionVectors.exists(spark, dir))
+    val after = PDataset.scanParquet(spark, dir)
+    checkBoundsAndSizes(after)
+    assert(after.isDisjoint)
+    val df = after.toDF
+    assert(df.count() == 199)
+    assert(df.filter(col("k") === 30L).isEmpty,
+      "the materialized delete must survive the rebase")
+    assert(df.filter(col("k") === 150L).head().getString(2) == "other",
+      "the concurrent upsert must survive the rebase")
+    // every data file on disk is referenced, and vice versa
+    val m = Sidecar.load(spark, dir)
+    val onDisk = new java.io.File(dir).listFiles()
+      .map(_.getName).filter(n => n.endsWith(".parquet") &&
+        !n.startsWith("_") && !n.startsWith(".")).toSet
+    assert(onDisk == m.files.toSet,
+      s"orphans or missing: disk=$onDisk sidecar=${m.files.toSet}")
   }
 
   test("renameColumns is metadata-only: bytes untouched, reads and " +
