@@ -433,21 +433,26 @@ object DeletionVectors {
       // rows in a file this fold rewrote) that deletes only this op's
       // unregistered files. Marks naming files no longer in the
       // sidecar fold into nothing: no rewrite, only the cleanup.
-      val writtenSet =
-        if (affected.isEmpty) Set.empty[Int]
-        else Maintenance.rewriteAffected(spark, dir, fs, dirPath, m,
-          loadedFp, affected, kept, retain, "materialize",
-          commitsAtLoad.map(_.getName).toSet, ".graft-dvmat-",
-          mayEmpty = true)
+      val created =
+        if (affected.isEmpty) 0
+        else {
+          val replacement = Maintenance.writeReplacements(spark, fs,
+            dirPath, m, affected.map(m.files), kept, "materialize",
+            ".graft-dvmat-", mayEmpty = true)
+          Maintenance.installCommit(spark, dir, fs, dirPath, m, loadedFp,
+            replacement, affected.length, retain, "materialize",
+            commitsAtLoad.map(_.getName).toSet)
+          replacement.values.count(_.nonEmpty)
+        }
       // delete only the commits this fold covered; drop the dir
       // itself only when nothing new landed meanwhile
       commitsAtLoad.foreach(c => GraftFs.deleteRecursive(fs, c))
       if (commitDirs(fs, dirPath).isEmpty) {
         GraftFs.deleteRecursive(fs, dvDir(dirPath)); ()
       }
-      Maintenance.Report(rewritten = writtenSet.size,
-        dropped = affected.length - writtenSet.size, merged = 0,
-        created = writtenSet.size,
+      Maintenance.Report(rewritten = created,
+        dropped = affected.length - created, merged = 0,
+        created = created,
         untouched = m.files.length - affected.length)
     } finally { dv.unpersist(); () }
   }

@@ -6,9 +6,6 @@ import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
-import scala.concurrent.{Await, ExecutionContext, Future}
-import scala.concurrent.duration.{Duration => SDuration}
-
 import graft.core.{DivisionRouter, FileOrdinal, FileOrdinalExpr, GraftFs,
   Lex, LexColumns, PDataset, ScatterWrite, Sidecar, Stats}
 import graft.core.Lex.Bound
@@ -29,15 +26,23 @@ import graft.core.Lex.Bound
   *     router; only partitions that receive updates are rewritten —
   *     updating 0.1% of keys rewrites ~0.1% of files.
   *
-  * All three follow the sidecar's crash-safety discipline: new
-  * content is written under fresh partition file names (numbered past
-  * `max_partition_index`), the metadata swap is atomic (temp +
-  * rename, see [[Sidecar.write]]), and replaced files are deleted
-  * only after the new sidecar is installed — a crash at any point
-  * leaves a readable dataset (at worst with orphaned un-referenced
-  * files). With `retain = true` an op instead archives the outgoing
-  * metadata as a readable generation — time travel via
-  * [[scanVersion]], storage reclaim via [[vacuum]].
+  * Every op that replaces data files (these three, [[recluster]],
+  * the row-level rewrites and [[DeletionVectors.materialize]]) writes
+  * through one scatter job ([[writeReplacements]]) and commits
+  * through one install ([[installCommit]]), so all follow the same
+  * crash-safety discipline: new content is written under fresh
+  * partition file names (numbered past `max_partition_index`, never
+  * overwriting a name a concurrent committer already holds), the
+  * metadata swap is atomic (temp + rename, see [[Sidecar.write]]) and
+  * rebases over a concurrent commit on other files, and replaced
+  * files are deleted only after the new sidecar is installed — a
+  * crash at any point leaves a readable dataset (at worst with
+  * orphaned un-referenced files or a stage directory [[vacuum]]
+  * reclaims). A concurrent commit that rewrote one of the op's input
+  * files, or a deletion-vector mark landing on one, aborts the op
+  * and removes its unregistered files. With `retain = true` an op
+  * instead archives the outgoing metadata as a readable generation —
+  * time travel via [[scanVersion]], storage reclaim via [[vacuum]].
   *
   * The reference engine has no in-place maintenance (a padawan
   * dataset is rewritten wholesale via `repartition` +
@@ -89,7 +94,8 @@ object Maintenance {
     ".graft-scatter-", ".graft-rowscatter-", ".graft-fastwrite-",
     ".graft-zorder-", ".graft-txn-seed-", ".graft-compact-",
     ".graft-dvmat-", ".graft-replace-", ".graft-update-",
-    ".graft-upsert-", ".spark-stage-",
+    ".graft-upsert-", ".graft-recluster-", ".graft-delrange-",
+    ".spark-stage-",
     "._padawan_metadata.json.tmp-")
 
   /** Default age before stage debris is considered abandoned (an
@@ -669,32 +675,43 @@ object Maintenance {
           "no changes were installed — reload and re-run")
   }
 
-  /** Test seam: runs after a row-level op's data rewrite is durable
-    * but before its sidecar install — the window a concurrent commit
-    * can land in. No-op in production. */
+  /** Test seam: runs after a rewriting op's new files are durable
+    * but before [[installCommit]] swaps the sidecar — the window a
+    * concurrent commit can land in. Every file-replacing op reaches
+    * it (compact and its scoped forms, deleteRange, recluster, the
+    * row-level rewrites, DV materialize). No-op in production. */
   private[graft] var beforeRowLevelInstall: () => Unit = () => ()
 
-  /** Install a row-level rewrite's sidecar with bounded OCC
-    * rebase-and-retry: the expensive part — the data rewrite — is
-    * already durable, and a concurrent commit that touched neither
-    * this op's INPUT files nor its allocated OUTPUT names (a sink
-    * append, a keyed op on disjoint files) is merged instead of
-    * aborting the whole UPDATE/MERGE. `replacement` maps each
-    * consumed input file name to its replacement entry (None = the
-    * rewrite emptied it); untouched files keep the LATEST
-    * generation's entries, so the concurrent commit's work survives.
-    * Aborts loudly when the concurrent commit rewrote an input file
-    * (the Delta concurrent-delete-read case), collided on an output
-    * name, or changed the schema/index/rename mapping this rewrite
-    * was planned against. */
-  private def installRowLevelCommit(
+  /** A sidecar entry: file name, row count, lex lower / upper bound. */
+  private[operators] type Entry = (String, Long, Bound, Bound)
+
+  /** The one commit every file-replacing op installs through, with
+    * bounded OCC rebase-and-retry: the expensive part — the data
+    * rewrite — is already durable, and a concurrent commit that
+    * touched neither this op's INPUT files nor its OUTPUT names (a
+    * sink append, a keyed op on disjoint files) is merged instead of
+    * aborting the op. `replacement` maps each consumed input file name
+    * to the entries that take its place (Nil = dropped, emptied, or
+    * merged into another input's entries); untouched files keep the
+    * LATEST generation's entries, so the concurrent commit's work
+    * survives. `slots` is the number of partition-name slots the op
+    * allocated past `m0.maxPartitionIndex`. Aborts loudly when the
+    * concurrent commit rewrote an input file (the Delta
+    * concurrent-delete-read case), collided on an output name, changed
+    * the schema/index/rename mapping this rewrite was planned against,
+    * or marked rows of a replaced file with a deletion vector not in
+    * `dvSnapshot`. After the swap, deletes the replaced files no
+    * archived generation references (unless `retain`) and extends the
+    * Bloom / column-stats sidecars to the new files. */
+  private[operators] def installCommit(
       spark: SparkSession,
       dir: String,
       fs: org.apache.hadoop.fs.FileSystem,
       dirPath: HPath,
       m0: Sidecar.Meta,
       loadedFp0: (Long, Long),
-      replacement: Map[String, Option[(String, Long, Bound, Bound)]],
+      replacement: Map[String, Seq[Entry]],
+      slots: Int,
       retain: Boolean,
       op: String,
       dvSnapshot: Set[String]): Unit = {
@@ -720,7 +737,8 @@ object Maintenance {
     var fp = loadedFp0
     var cur = m0
     var attempts = 0
-    while (true) {
+    var installed = false
+    while (!installed) {
       // DV commits never touch the sidecar, so guardUnchanged below
       // cannot see a concurrent DV DELETE that marked rows in a file
       // this op rewrote mid-rewrite (the rewrite copied those rows
@@ -737,11 +755,8 @@ object Maintenance {
       }
       val entries = cur.files.indices.flatMap { p =>
         val name = cur.files(p)
-        replacement.get(name) match {
-          case None => Some((name, cur.sizes(p),
-            cur.lowerBounds(p), cur.upperBounds(p)))
-          case Some(repl) => repl
-        }
+        replacement.getOrElse(name, Seq((name, cur.sizes(p),
+          cur.lowerBounds(p), cur.upperBounds(p))))
       }
       try {
         guardUnchanged(spark, dirPath, fp)
@@ -749,10 +764,9 @@ object Maintenance {
         Sidecar.write(spark, dir, cur.indexColumns,
           entries.map(_._1), entries.map(_._2),
           entries.map(_._3), entries.map(_._4),
-          math.max(cur.maxPartitionIndex,
-            m0.maxPartitionIndex + replacement.size),
+          math.max(cur.maxPartitionIndex, m0.maxPartitionIndex + slots),
           cur.schema, extras = cur.extras)
-        return
+        installed = true
       } catch {
         case e: java.util.ConcurrentModificationException =>
           attempts += 1
@@ -787,80 +801,78 @@ object Maintenance {
           cur = m2
       }
     }
+    if (!retain)
+      deletableNow(spark, dir, replacement.keys.toSeq)
+        .foreach(f => fs.delete(new HPath(dirPath, f), false))
+    refreshBloom(spark, dir)
   }
 
-  /** The copy-on-write commit every 1:1 row-level rewrite shares
-    * ([[updateWhere]] and its index-assignment form, [[replaceWhere]],
-    * the keyed merges, [[DeletionVectors.materialize]]): each file at
-    * a position in `affected` is replaced by at most one new file.
+  /** The write half of every copy-on-write rewrite: ONE scatter job
+    * writes the new files, and the result says which entries replace
+    * which input file, ready for [[installCommit]].
     *
-    * `tagged` holds the rewritten rows with an int `__part` column
-    * carrying the DENSE ordinal of the row's target within
-    * `affected` (0 until affected.length), so the one scatter job
-    * shuffles at the affected width, not the table's file count.
-    * Rows are re-sorted on the index and written under PHYSICAL
+    * `tagged` holds the rows to write with an int `__part` column
+    * carrying a DENSE ordinal into `targets`, the input file each
+    * output partition replaces (several ordinals may name one input:
+    * [[recluster]] maps every range to its first file). The shuffle
+    * width is `targets.length`, not the table's file count. Rows are
+    * re-sorted on the index columns, or on the synthetic `orderCols`
+    * (dropped before the sink) when given, and written under PHYSICAL
     * column names. New files take the slots after
     * `m.maxPartitionIndex`, but never overwrite a taken slot: a
     * concurrent committer's file keeps its name and this write lands
-    * under a disambiguated one, which is what gets registered.
+    * under a disambiguated one, which is what gets returned.
     *
-    * Steps, in order: scatter write, one stats job over the written
-    * files, the OCC install ([[installRowLevelCommit]]), deleting the
-    * replaced files no archived generation references, and extending
-    * the Bloom / column-stats sidecars. Returns the positions that
-    * were written. An affected file that received no rows drops from
-    * the sidecar; unless `mayEmpty` says the caller's op can empty a
-    * file, that aborts before anything installs. Callers own building
-    * `tagged`, deletion-vector cleanup and their [[Report]]. */
-  private[operators] def rewriteAffected(
+    * Row counts and bounds come from one stats job over the written
+    * files, or from `known` (per ordinal, exact from metadata) when
+    * the caller has them. An ordinal that received no rows writes no
+    * file; unless `mayEmpty` says the caller's op can empty one, that
+    * aborts before anything installs. Every target is a key of the
+    * result; its entries follow ordinal order. */
+  private[operators] def writeReplacements(
       spark: SparkSession,
-      dir: String,
       fs: org.apache.hadoop.fs.FileSystem,
       dirPath: HPath,
       m: Sidecar.Meta,
-      loadedFp: (Long, Long),
-      affected: IndexedSeq[Int],
+      targets: IndexedSeq[String],
       tagged: DataFrame,
-      retain: Boolean,
       op: String,
-      dvSnap: Set[String],
       stagePrefix: String,
-      mayEmpty: Boolean): Set[Int] = {
+      mayEmpty: Boolean,
+      orderCols: Seq[String] = Nil,
+      known: Option[IndexedSeq[(Long, Bound, Bound)]] = None):
+      Map[String, Seq[Entry]] = {
     val stage = GraftFs.mkStageDir(fs,
       Option(dirPath.getParent).getOrElse(dirPath), stagePrefix,
       dirPath.getName)
     val written =
-      try ScatterWrite.partFiles(spark, tagged, affected.length, fs,
+      try ScatterWrite.partFiles(spark, tagged, targets.length, fs,
         dirPath, stage,
         j => Sidecar.partitionFileName(m.maxPartitionIndex + 1 + j),
-        orderCols = m.indexColumns.toSeq, dropOrderCols = false,
-        renames = m.columnRenames)
+        orderCols = if (orderCols.isEmpty) m.indexColumns.toSeq
+          else orderCols,
+        dropOrderCols = orderCols.nonEmpty, renames = m.columnRenames)
       finally GraftFs.deleteRecursive(fs, stage)
-    val stray = written.map(_._1).filterNot(affected.indices.contains)
+    val stray = written.map(_._1).filterNot(targets.indices.contains)
     require(stray.isEmpty, s"$op scatter wrote unexpected partitions $stray")
-    require(mayEmpty || written.length == affected.length,
+    require(mayEmpty || written.length == targets.length,
       s"$op scatter wrote ${written.length} partitions, " +
-        s"expected ${affected.length}")
-    // dense ordinals back to positions, under the ACTUAL written names
-    val nameByPos: Map[Int, String] =
-      written.map { case (j, n) => affected(j) -> n }.toMap
+        s"expected ${targets.length}")
     def pathOf(n: String): String = new HPath(dirPath, n).toString
-    val statsByPath = Stats.forFiles(spark, written.map(w => pathOf(w._2)),
-      m.indexColumns.map(m.physicalName), Some(m.physicalSchema))
-    val replacement: Map[String, Option[(String, Long, Bound, Bound)]] =
-      affected.map { p =>
-        m.files(p) -> nameByPos.get(p).map { n =>
-          val st = statsByPath(Stats.normalizePath(pathOf(n)))
-          (n, st.size, st.lb, st.ub)
+    val stats: IndexedSeq[(Long, Bound, Bound)] = known match {
+      case Some(k) => written.map(w => k(w._1))
+      case None =>
+        val byPath = Stats.forFiles(spark, written.map(w => pathOf(w._2)),
+          m.indexColumns.map(m.physicalName), Some(m.physicalSchema))
+        written.map { w =>
+          val st = byPath(Stats.normalizePath(pathOf(w._2)))
+          (st.size, st.lb, st.ub)
         }
-      }.toMap
-    installRowLevelCommit(spark, dir, fs, dirPath, m, loadedFp,
-      replacement, retain, op, dvSnap)
-    if (!retain)
-      deletableNow(spark, dir, affected.map(m.files))
-        .foreach(f => fs.delete(new HPath(dirPath, f), false))
-    refreshBloom(spark, dir)
-    nameByPos.keySet
+    }
+    val entries = written.zip(stats).map { case ((j, n), (rows, lb, ub)) =>
+      targets(j) -> ((n, rows, lb, ub): Entry) }
+    targets.map(_ -> Seq.empty[Entry]).toMap ++
+      entries.groupMap(_._1)(_._2)
   }
 
   /** Keep the Bloom and column-stats sidecars effective across
@@ -1555,11 +1567,10 @@ object Maintenance {
     * are the lex-min/max of its members' bounds, exact from metadata
     * — no stats job.
     *
-    * Merged files are written either as one tagged-shuffle job (when
-    * every member file is a single input split — the common case,
-    * since members are small by selection) or as parallel per-group
-    * driver jobs. Intra-partition row order is preserved in both
-    * paths (members concatenate in partition order).
+    * All merged files are written by one tagged-shuffle job.
+    * Intra-partition row order is preserved: members concatenate in
+    * partition order, each in its own row order, however many input
+    * splits a member spans.
     */
   def compact(
       spark: SparkSession,
@@ -1602,7 +1613,7 @@ object Maintenance {
   /** [[compact]] targeting FILE BYTES instead of rows — the measure
     * that actually governs scan-task sizing (a 128 MB–1 GB target per
     * file at warehouse scale). Weights come from one driver-side FS
-    * listing; the packing, write paths and crash discipline are
+    * listing; the packing, write path and crash discipline are
     * identical to the row-targeted form. Prefer this when schemas are
     * wide or compression varies across files. */
   def compactBytes(
@@ -1665,87 +1676,41 @@ object Maintenance {
     if (merges.isEmpty)
       return Report(0, 0, 0, 0, m.files.length)
 
+    // One job for ALL groups: tag each row with its group ordinal
+    // (file → group, a driver-built map riding along as one reference
+    // object) and an order key (member rank within the run, then the
+    // row's position in its file — exact however many splits a member
+    // spans), shuffle once, sink all merged files in parallel. A
+    // merged file's bounds are exact from its members' metadata.
     def pathOf(p: Int): String = new HPath(dirPath, m.files(p)).toString
-    val newNameOfGroup: Map[Int, String] = merges.indices.map(g =>
-      g -> Sidecar.partitionFileName(m.maxPartitionIndex + 1 + g)).toMap
-    val memberFiles = merges.flatten.map(pathOf)
-
-    val maxSplit =
-      org.apache.spark.sql.internal.SQLConf.get.filesMaxPartitionBytes
-    val singleSplit = GraftFs.fileSizes(GraftFs.conf(spark), memberFiles)
-      .forall(_._2 <= maxSplit)
-    // the name each merged group was written under
-    val nameOfGroup: Map[Int, String] =
-      if (singleSplit && merges.length >= PDataset.scatterWriteThreshold) {
-        // One job for ALL groups: tag each row with its group ordinal
-        // (file → group, a driver-built map riding along as one
-        // reference object) and a global order key (member rank within
-        // the run × the task-local row ordinal — exact because each
-        // member is one split, hence one task), shuffle once, sink all
-        // merged files in parallel.
-        val groupOf = new FileOrdinal(merges.zipWithIndex.flatMap {
-          case (g, gi) => g.map(p => Stats.normalizePath(pathOf(p)) -> gi)
-        }.toMap)
-        val rankOf = new FileOrdinal(merges.flatten.zipWithIndex.map {
-          case (p, r) => Stats.normalizePath(pathOf(p)) -> r
-        }.toMap)
-        val stage = GraftFs.mkStageDir(fs,
-          Option(dirPath.getParent).getOrElse(dirPath), ".graft-compact-",
-          dirPath.getName)
-        try {
-          val tagged = m.readData(spark, memberFiles)
-            .withColumn("__part",
-              FileOrdinalExpr.ordinal(input_file_name(), groupOf))
-            .withColumn("__ord",
-              shiftleft(FileOrdinalExpr.ordinal(input_file_name(), rankOf)
-                .cast("long"), 33) +
-                monotonically_increasing_id().bitwiseAND(lit((1L << 33) - 1)))
-          // a slot a concurrent committer took lands under a
-          // disambiguated name: register what was actually written
-          ScatterWrite.partFiles(spark, tagged, merges.length, fs, dirPath,
-            stage, newNameOfGroup, orderCols = Seq("__ord"),
-            renames = m.columnRenames).toMap
-        } finally GraftFs.deleteRecursive(fs, stage)
-      } else {
-        implicit val ec: ExecutionContext = PDataset.writeEc
-        val writes = merges.zipWithIndex.map { case (g, gi) =>
-          Future {
-            val df = g.map(p => m.readData(spark, Seq(pathOf(p))))
-              .reduceLeft(_.union(_))
-            Sidecar.writeSingleParquet(m.toPhysical(df),
-              new HPath(dirPath, newNameOfGroup(gi)).toString)
-          }
-        }
-        writes.foreach(Await.result(_, SDuration.Inf))
-        newNameOfGroup
-      }
-
-    // New sidecar in partition order: singleton runs keep their
-    // entry; merged runs collapse to one exact-from-metadata entry.
-    var gi = -1
-    val entries = groups.map { g =>
-      if (g.length == 1) {
-        val p = g.head
-        (m.files(p), m.sizes(p), m.lowerBounds(p), m.upperBounds(p))
-      } else {
-        gi += 1
-        (nameOfGroup(gi),
-          g.map(m.sizes).sum,
-          g.map(m.lowerBounds).min(Lex.boundOrdering),
-          g.map(m.upperBounds).max(Lex.boundOrdering))
-      }
-    }
-    guardUnchanged(spark, dirPath, loadedFp)
-    if (retain) archiveCurrent(spark, fs, dirPath)
-    Sidecar.write(spark, dir, m.indexColumns, entries.map(_._1),
-      entries.map(_._2), entries.map(_._3), entries.map(_._4),
-      m.maxPartitionIndex + merges.length, m.schema, extras = m.extras)
-    if (!retain)
-      deletableNow(spark, dir, merges.flatten.map(m.files))
-        .foreach(f => fs.delete(new HPath(dirPath, f), false))
-    refreshBloom(spark, dir)
+    def keyOf(p: Int): String = Stats.normalizePath(pathOf(p))
+    val groupOf = new FileOrdinal(merges.zipWithIndex.flatMap {
+      case (g, gi) => g.map(keyOf(_) -> gi)
+    }.toMap)
+    val rankOf = new FileOrdinal(
+      merges.flatten.zipWithIndex.map { case (p, r) => keyOf(p) -> r }.toMap)
+    val tagged = m.readData(spark, merges.flatten.map(pathOf))
+      .withColumn("__part", FileOrdinalExpr.ordinal(input_file_name(), groupOf))
+      .withColumn("__rank", FileOrdinalExpr.ordinal(input_file_name(), rankOf))
+      .withColumn("__row", col("_metadata.row_index"))
+    val known = merges.map(g => (g.map(m.sizes).sum,
+      g.map(m.lowerBounds).min(Lex.boundOrdering),
+      g.map(m.upperBounds).max(Lex.boundOrdering)))
+    // the first member of a run takes the merged entry, in place, so
+    // partition order is kept; the other members drop. A run of
+    // zero-row files writes nothing and simply drops.
+    val written = writeReplacements(spark, fs, dirPath, m,
+      merges.map(g => m.files(g.head)), tagged, "compact",
+      ".graft-compact-", mayEmpty = known.exists(_._1 == 0L),
+      orderCols = Seq("__rank", "__row"), known = Some(known))
+    val replacement =
+      merges.flatMap(_.tail).map(p => m.files(p) -> Seq.empty[Entry]).toMap ++
+        written
+    installCommit(spark, dir, fs, dirPath, m, loadedFp, replacement,
+      merges.length, retain, "compact", Set.empty)
     Report(rewritten = 0, dropped = 0, merged = merges.map(_.length).sum,
-      created = merges.length, untouched = groups.count(_.length == 1))
+      created = written.values.count(_.nonEmpty),
+      untouched = groups.count(_.length == 1))
   }
 
   // ---- delete range ----
@@ -1760,9 +1725,11 @@ object Maintenance {
     * Classification is pure driver metadata: a file whose bounds sit
     * entirely inside the range is dropped without being read; a file
     * disjoint from the range is untouched; only straddling files are
-    * rewritten (with exact stats recomputed for just those files, one
-    * job). For a contiguous range over disjoint sorted partitions
-    * that is at most TWO files regardless of table size.
+    * rewritten, in one scatter job with their rows index-sorted, plus
+    * one stats job over just the new files. For a contiguous range
+    * over disjoint sorted partitions that is at most TWO files
+    * regardless of table size; a range covering only whole files runs
+    * no job. A concurrent commit on other files is rebased over.
     */
   def deleteRange(
       spark: SparkSession,
@@ -1844,54 +1811,30 @@ object Maintenance {
     }
     val survives = !coalesce(inRange, lit(false))
 
-    val newNameOf: Map[Int, String] = rewritePos.zipWithIndex.map {
-      case (p, j) => p -> Sidecar.partitionFileName(m.maxPartitionIndex + 1 + j)
-    }.toMap
-    implicit val ec: ExecutionContext = PDataset.writeEc
-    val writes = rewritePos.map { p =>
-      Future {
-        Sidecar.writeSingleParquet(
-          m.toPhysical(m.readData(spark,
-            Seq(new HPath(dirPath, m.files(p)).toString))
-            .filter(survives)),
-          new HPath(dirPath, newNameOf(p)).toString)
+    // Straddling files are rewritten without their in-range rows in
+    // ONE scatter job at width rewritePos.length (fully covered files
+    // are never read); a rewrite that emptied out (possible only with
+    // duplicate boundary keys) writes nothing and drops like a
+    // fully-covered file. A delete covering only whole files runs no
+    // job at all.
+    val rewritten =
+      if (rewritePos.isEmpty) Map.empty[String, Seq[Entry]]
+      else {
+        def pathOf(p: Int): String = new HPath(dirPath, m.files(p)).toString
+        val partOf = new FileOrdinal(rewritePos.zipWithIndex.map {
+          case (p, j) => Stats.normalizePath(pathOf(p)) -> j }.toMap)
+        val tagged = m.readData(spark, rewritePos.map(pathOf))
+          .withColumn("__part",
+            FileOrdinalExpr.ordinal(input_file_name(), partOf))
+          .filter(survives)
+        writeReplacements(spark, fs, dirPath, m, rewritePos.map(m.files),
+          tagged, "deleteRange", ".graft-delrange-", mayEmpty = true)
       }
-    }
-    writes.foreach(Await.result(_, SDuration.Inf))
-
-    // Exact stats for just the rewritten files (one job); a rewrite
-    // that emptied out (possible only with duplicate boundary keys)
-    // is dropped like a fully-covered file.
-    val statsByPath = Stats.forFiles(spark,
-      rewritePos.map(p => new HPath(dirPath, newNameOf(p)).toString),
-      m.indexColumns.map(m.physicalName), Some(m.physicalSchema))
-    val dropSet = dropPos.toSet
-    val emptied = scala.collection.mutable.Set.empty[Int]
-    val entries = m.files.indices.flatMap { p =>
-      if (dropSet(p)) None
-      else if (newNameOf.contains(p)) {
-        val full = Stats.normalizePath(
-          new HPath(dirPath, newNameOf(p)).toString)
-        statsByPath.get(full) match {
-          case Some(st) => Some((newNameOf(p), st.size, st.lb, st.ub))
-          case None => emptied += p; None
-        }
-      } else Some((m.files(p), m.sizes(p), m.lowerBounds(p), m.upperBounds(p)))
-    }
-    guardUnchanged(spark, dirPath, loadedFp)
-    if (retain) archiveCurrent(spark, fs, dirPath)
-    Sidecar.write(spark, dir, m.indexColumns, entries.map(_._1),
-      entries.map(_._2), entries.map(_._3), entries.map(_._4),
-      m.maxPartitionIndex + rewritePos.length, m.schema,
-      extras = m.extras)
-    if (!retain)
-      deletableNow(spark, dir, (dropPos ++ rewritePos).map(m.files))
-        .foreach(f => fs.delete(new HPath(dirPath, f), false))
-    // An emptied rewrite is referenced by NO generation — always clean.
-    emptied.foreach(p => fs.delete(new HPath(dirPath, newNameOf(p)), false))
-    refreshBloom(spark, dir)
+    installCommit(spark, dir, fs, dirPath, m, loadedFp,
+      dropPos.map(p => m.files(p) -> Seq.empty[Entry]).toMap ++ rewritten,
+      rewritePos.length, retain, "deleteRange", Set.empty)
     Report(rewritten = rewritePos.length, dropped = dropPos.length,
-      merged = 0, created = rewritePos.length - emptied.size,
+      merged = 0, created = rewritten.values.count(_.nonEmpty),
       untouched = m.files.length - dropPos.length - rewritePos.length)
   }
 
@@ -2060,14 +2003,16 @@ object Maintenance {
     // a file whose every live row was already DV-deleted writes
     // nothing and drops from the sidecar (possible only with a
     // folded overlay — plain updates keep every row)
-    val writtenSet = rewriteAffected(spark, dir, fs, dirPath, m, loadedFp,
-      affected, updated, retain, "updateWhere", dvSnap, ".graft-update-",
+    val replacement = writeReplacements(spark, fs, dirPath, m,
+      affected.map(m.files), updated, "updateWhere", ".graft-update-",
       mayEmpty = dvOpt.isDefined)
+    installCommit(spark, dir, fs, dirPath, m, loadedFp, replacement,
+      affected.length, retain, "updateWhere", dvSnap)
     DeletionVectors.dropEntriesForFiles(spark, dir,
       affected.map(m.files).toSet)
-    Report(rewritten = writtenSet.size,
-      dropped = affected.length - writtenSet.size,
-      merged = 0, created = writtenSet.size,
+    val created = replacement.values.count(_.nonEmpty)
+    Report(rewritten = created, dropped = affected.length - created,
+      merged = 0, created = created,
       untouched = m.files.length - affected.length)
   }
 
@@ -2152,15 +2097,17 @@ object Maintenance {
         element_at(typedLit(denseOf), col("__dest"))).drop("__dest")
       // A source file whose every row moved away writes nothing and
       // drops from the sidecar.
-      val writtenSet = rewriteAffected(spark, dir, fs, dirPath, m,
-        loadedFp, affected, tagged, retain,
-        "updateWhere (index assignment)", dvSnap, ".graft-update-",
+      val op = "updateWhere (index assignment)"
+      val replacement = writeReplacements(spark, fs, dirPath, m,
+        affected.map(m.files), tagged, op, ".graft-update-",
         mayEmpty = true)
+      installCommit(spark, dir, fs, dirPath, m, loadedFp, replacement,
+        affected.length, retain, op, dvSnap)
       DeletionVectors.dropEntriesForFiles(spark, dir,
         affected.map(m.files).toSet)
-      Report(rewritten = writtenSet.size,
-        dropped = affected.length - writtenSet.size,
-        merged = 0, created = writtenSet.size,
+      val created = replacement.values.count(_.nonEmpty)
+      Report(rewritten = created, dropped = affected.length - created,
+        merged = 0, created = created,
         untouched = m.files.length - affected.length)
     } finally { routed.unpersist(); () }
   }
@@ -2207,11 +2154,12 @@ object Maintenance {
     * range-partitioned files staged beside the table, and one atomic
     * sidecar swap installs them — extras (constraints, txn ledgers,
     * rename map) survive verbatim, history archives under `retain`,
-    * and the same OCC guards as the row-level ops abort on a
-    * concurrent commit or fresh DV mark. On a SHALLOW CLONE this
-    * LOCALIZES it: the rewrite writes clone-local files and only
-    * drops the external references — the source's bytes are never
-    * deleted. O(table) by definition — schedule it like OPTIMIZE,
+    * and the shared install ([[installCommit]]) rebases over a
+    * concurrent commit on other files (an append lands beside the
+    * reclustered files) and aborts on a fresh DV mark. On a SHALLOW
+    * CLONE this LOCALIZES it: the rewrite writes clone-local files and
+    * only drops the external references — the source's bytes are
+    * never deleted. O(table) by definition — schedule it like OPTIMIZE,
     * when OVERLAP (not file count, [[compact]]'s trigger) is the
     * problem; file granularity is preserved (one output file per
     * current file), so follow with [[compact]] if small files are
@@ -2262,47 +2210,21 @@ object Maintenance {
     }
     val gOut = cuts.length + 1
     val keyCols = m.indexColumns.toSeq
-    val newNameOf: Int => String =
-      j => Sidecar.partitionFileName(m.maxPartitionIndex + 1 + j)
-    val stage = GraftFs.mkStageDir(fs,
-      Option(dirPath.getParent).getOrElse(dirPath), ".graft-recluster-",
-      dirPath.getName)
-    try {
-      val tagged = live.withColumn("__part",
-        if (cuts.isEmpty) lit(0)
-        else DivisionRouter.route(keyCols.map(col), cuts))
-      val writtenDense = ScatterWrite.partFiles(spark, tagged, gOut, fs,
-        dirPath, stage, newNameOf, orderCols = keyCols,
-        dropOrderCols = false, renames = m.columnRenames)
-      val newNames = writtenDense.sortBy(_._1).map(_._2)
-      val statsByPath = Stats.forFiles(spark,
-        newNames.map(n => new HPath(dirPath, n).toString),
-        m.indexColumns.map(m.physicalName), Some(m.physicalSchema))
-      val entries = newNames.map { n =>
-        val st = statsByPath(Stats.normalizePath(
-          new HPath(dirPath, n).toString))
-        (n, st.size, st.lb, st.ub)
-      }.sortBy(e => (e._3, e._4))(
-        Ordering.Tuple2(Lex.boundOrdering, Lex.boundOrdering))
-      // OCC: abort if a commit or a fresh DV mark landed since load —
-      // the moved files become debris for the sweep, nothing installs
-      guardUnchanged(spark, dirPath, loadedFp)
-      DeletionVectors.requireNoNewMarks(spark, dir, dvSnap,
-        m.files.map(GraftFs.baseName).toSet, "recluster")
-      if (retain) archiveCurrent(spark, fs, dirPath)
-      Sidecar.write(spark, dir, m.indexColumns, entries.map(_._1),
-        entries.map(_._2), entries.map(_._3), entries.map(_._4),
-        m.maxPartitionIndex + gOut, m.schema,
-        extras = m.extras)
-      // folded marks referenced only replaced files — clear them
-      DeletionVectors.dropEntriesForFiles(spark, dir, m.files.toSet)
-      if (!retain)
-        deletableNow(spark, dir, m.files)
-          .foreach(f => fs.delete(new HPath(dirPath, f), false))
-      refreshBloom(spark, dir)
-      Report(rewritten = m.files.length, dropped = 0, merged = 0,
-        created = entries.length, untouched = 0)
-    } finally GraftFs.deleteRecursive(fs, stage)
+    val tagged = live.withColumn("__part",
+      if (cuts.isEmpty) lit(0)
+      else DivisionRouter.route(keyCols.map(col), cuts))
+    // every range replaces the whole table: the first current file
+    // takes all new entries (range order is bound order), the rest drop
+    val ranges = writeReplacements(spark, fs, dirPath, m,
+      IndexedSeq.fill(gOut)(m.files.head), tagged, "recluster",
+      ".graft-recluster-", mayEmpty = true)
+    installCommit(spark, dir, fs, dirPath, m, loadedFp,
+      m.files.map(_ -> Seq.empty[Entry]).toMap ++ ranges, gOut, retain,
+      "recluster", dvSnap)
+    // folded marks referenced only replaced files — clear them
+    DeletionVectors.dropEntriesForFiles(spark, dir, m.files.toSet)
+    Report(rewritten = m.files.length, dropped = 0, merged = 0,
+      created = ranges.values.map(_.length).sum, untouched = 0)
   }
 
   /** Delta-style `replaceWhere`: atomically replace the rows
@@ -2417,14 +2339,16 @@ object Maintenance {
         element_at(typedLit(denseOf), col("__part"))))
 
       // a partition the replace emptied entirely drops from the sidecar
-      val writtenSet = rewriteAffected(spark, dir, fs, dirPath, m,
-        loadedFp, affected, combined, retain, "replaceWhere", dvSnap,
-        ".graft-replace-", mayEmpty = true)
+      val replacement = writeReplacements(spark, fs, dirPath, m,
+        affected.map(m.files), combined, "replaceWhere", ".graft-replace-",
+        mayEmpty = true)
+      installCommit(spark, dir, fs, dirPath, m, loadedFp, replacement,
+        affected.length, retain, "replaceWhere", dvSnap)
       DeletionVectors.dropEntriesForFiles(spark, dir,
         affected.map(m.files).toSet)
-      Report(rewritten = writtenSet.size,
-        dropped = affected.length - writtenSet.size, merged = 0,
-        created = writtenSet.size,
+      val created = replacement.values.count(_.nonEmpty)
+      Report(rewritten = created, dropped = affected.length - created,
+        merged = 0, created = created,
         untouched = m.files.length - affected.length)
     } finally { aligned.unpersist(); () }
   }
@@ -2641,14 +2565,16 @@ object Maintenance {
 
     // A partition every row of which was deleted writes nothing and
     // drops from the sidecar (possible only when deletes are present).
-    val writtenSet = rewriteAffected(spark, dir, fs, dirPath, m, loadedFp,
-      affected, resolved, retain, "keyed maintenance", dvSnap,
+    val replacement = writeReplacements(spark, fs, dirPath, m,
+      affected.map(m.files), resolved, "keyed maintenance",
       ".graft-upsert-", mayEmpty = nDel > 0)
+    installCommit(spark, dir, fs, dirPath, m, loadedFp, replacement,
+      affected.length, retain, "keyed maintenance", dvSnap)
     DeletionVectors.dropEntriesForFiles(spark, dir,
       affected.map(m.files).toSet)
-    Report(rewritten = writtenSet.size,
-      dropped = affected.length - writtenSet.size,
-      merged = 0, created = writtenSet.size,
+    val created = replacement.values.count(_.nonEmpty)
+    Report(rewritten = created, dropped = affected.length - created,
+      merged = 0, created = created,
       untouched = m.files.length - affected.length,
       upsertRows = nUpd, deleteRows = nDel)
   }

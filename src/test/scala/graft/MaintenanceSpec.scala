@@ -193,47 +193,95 @@ class MaintenanceSpec extends AnyFunSuite {
     val dir = tempDir("maint-compact-wide") + "/ds"
     val before = writeKeyed(dir, 480, 10) // 48 small files
     assert(before.npartitions == 48)
-    val old = PDataset.scatterWriteThreshold
-    PDataset.scatterWriteThreshold = 4
-    try {
-      val report = Maintenance.compact(spark, dir, targetRows = 60)
-      assert(report.created == 8 && report.merged == 48, report.toString)
-    } finally PDataset.scatterWriteThreshold = old
+    val report = Maintenance.compact(spark, dir, targetRows = 60)
+    assert(report.created == 8 && report.merged == 48, report.toString)
     val after = PDataset.scanParquet(spark, dir)
     checkBoundsAndSizes(after)
     assert(after.isDisjoint)
     assertSameRows(after.toDF, keyedDF(0, 480))
   }
 
-  test("compact's one-job path never overwrites a file a concurrent " +
-      "committer holds at its new slot name") {
-    val dir = tempDir("maint-compact-slot") + "/ds"
-    writeKeyed(dir, 480, 10) // 48 small files
+  /** Pre-create a foreign committer's file at the first name slot an
+    * op on `dir` will allocate; returns a check that its bytes and
+    * mtime are unchanged and that the sidecar does not list it. */
+  private def occupyNextSlot(dir: String): () => Unit = {
     val m0 = Sidecar.load(spark, dir)
     // a concurrent committer planned from the same maxPartitionIndex
-    // and already moved its file into compact's first new slot
+    // and already moved its file into the op's first new slot
     val foreign = Paths.get(dir,
       Sidecar.partitionFileName(m0.maxPartitionIndex + 1))
     Files.write(foreign, "foreign committer bytes".getBytes("UTF-8"))
     val mtime = java.nio.file.attribute.FileTime.fromMillis(1000000000000L)
     Files.setLastModifiedTime(foreign, mtime)
     val bytes = Files.readAllBytes(foreign)
-    val old = PDataset.scatterWriteThreshold
-    PDataset.scatterWriteThreshold = 4
+    () => {
+      assert(java.util.Arrays.equals(Files.readAllBytes(foreign), bytes),
+        "the op overwrote the foreign file")
+      assert(Files.getLastModifiedTime(foreign) == mtime)
+      val m1 = Sidecar.load(spark, dir)
+      assert(!m1.files.contains(foreign.getFileName.toString),
+        "the op registered the foreign file as its own")
+      assert(m1.files.forall(f => Files.exists(Paths.get(dir, f))))
+    }
+  }
+
+  test("compact's one-job path never overwrites a file a concurrent " +
+      "committer holds at its new slot name") {
+    // (rows, rows per file, target, merge groups): 48 files in 8
+    // groups, and a narrow table of 10 files in 3 groups
+    Seq((480, 10, 60L, 8), (100, 10, 30L, 3)).foreach {
+      case (n, perFile, target, groups) =>
+        val dir = tempDir("maint-compact-slot") + "/ds"
+        writeKeyed(dir, n, perFile)
+        val foreignIntact = occupyNextSlot(dir)
+        val report = Maintenance.compact(spark, dir, targetRows = target)
+        assert(report.created == groups &&
+          report.merged == groups * (target / perFile), report.toString)
+        foreignIntact()
+        val after = PDataset.scanParquet(spark, dir)
+        checkBoundsAndSizes(after)
+        assertSameRows(after.toDF, keyedDF(0, n))
+    }
+  }
+
+  test("compact keeps row order inside members that span several " +
+      "splits") {
+    val dir = tempDir("maint-compact-order") + "/ds"
+    val conf = spark.conf
+    val oldSplit = conf.get("spark.sql.files.maxPartitionBytes")
+    // ~100-row row groups, and splits far smaller than one member
+    conf.set("parquet.block.size", "1024")
     try {
-      val report = Maintenance.compact(spark, dir, targetRows = 60)
-      assert(report.created == 8 && report.merged == 48, report.toString)
-    } finally PDataset.scatterWriteThreshold = old
-    assert(java.util.Arrays.equals(Files.readAllBytes(foreign), bytes),
-      "compact overwrote the foreign file")
-    assert(Files.getLastModifiedTime(foreign) == mtime)
-    val m1 = Sidecar.load(spark, dir)
-    assert(!m1.files.contains(foreign.getFileName.toString),
-      "compact registered the foreign file as its own")
-    assert(m1.files.forall(f => Files.exists(Paths.get(dir, f))))
-    val after = PDataset.scanParquet(spark, dir)
-    checkBoundsAndSizes(after)
-    assertSameRows(after.toDF, keyedDF(0, 480))
+      writeKeyed(dir, 600, 200) // 3 members
+      conf.set("spark.sql.files.maxPartitionBytes", "512")
+      val m0 = Sidecar.load(spark, dir)
+      def inFileOrder(f: String): Array[Row] =
+        spark.read.parquet(Paths.get(dir, f).toString)
+          .select(col("k"), col("grp"), col("payload"),
+            col("_metadata.row_index").as("__row"))
+          .orderBy("__row").drop("__row").collect()
+      m0.files.foreach { f =>
+        val footer = org.apache.parquet.hadoop.ParquetFileReader.open(
+          org.apache.parquet.hadoop.util.HadoopInputFile.fromPath(
+            new org.apache.hadoop.fs.Path(Paths.get(dir, f).toString),
+            spark.sessionState.newHadoopConf()))
+        try assert(footer.getRowGroups.size > 1,
+          s"fixture member $f must hold several row groups")
+        finally footer.close()
+        assert(spark.read.parquet(Paths.get(dir, f).toString)
+          .rdd.getNumPartitions > 1, s"member $f must span several splits")
+      }
+      val concatenated = m0.files.flatMap(inFileOrder)
+      val report = Maintenance.compact(spark, dir, targetRows = 600)
+      assert(report.created == 1 && report.merged == 3, report.toString)
+      val m1 = Sidecar.load(spark, dir)
+      assert(m1.files.length == 1)
+      assert(inFileOrder(m1.files.head).toSeq == concatenated.toSeq,
+        "merged file must equal its members concatenated in order")
+    } finally {
+      conf.unset("parquet.block.size")
+      conf.set("spark.sql.files.maxPartitionBytes", oldSplit)
+    }
   }
 
   test("compact works on an index-less (row-mode) dataset") {
@@ -360,6 +408,24 @@ class MaintenanceSpec extends AnyFunSuite {
     assert(kept.count() == 21 - 10)
     assert(kept.filter(col("k").isNull).count() == 1,
       "null-keyed row must survive a bounded delete")
+  }
+
+  test("deleteRange never overwrites a file a concurrent committer " +
+      "holds at its new slot name") {
+    val dir = tempDir("maint-del-slot") + "/ds"
+    writeKeyed(dir, 200, 50) // 4 files: 0-49, 50-99, 100-149, 150-199
+    val foreignIntact = occupyNextSlot(dir)
+    // [60, 100): straddles file 1 only
+    val report = Maintenance.deleteRange(spark, dir,
+      lb = Vector(Some(60L)), ub = Vector(Some(100L)), inclusive = "lower")
+    assert(report.rewritten == 1 && report.created == 1 &&
+      report.dropped == 0 && report.untouched == 3, report.toString)
+    foreignIntact()
+    val after = PDataset.scanParquet(spark, dir)
+    checkBoundsAndSizes(after)
+    assert(after.isDisjoint)
+    assertSameRows(after.toDF,
+      keyedDF(0, 200).filter(col("k") < 60 || col("k") >= 100))
   }
 
   // ---- schema evolution ----
@@ -610,6 +676,7 @@ class MaintenanceSpec extends AnyFunSuite {
     // but ONLY entries tagged with THIS dataset's name: the parent
     // is shared with sibling tables whose stages are not ours to kill
     val parentDead = mkParent(".graft-compact-ds.crashed")
+    val reclusterDead = mkParent(".graft-recluster-ds.crashed")
     val siblingStage = mkParent(".graft-compact-other.crashed")
     val untagged = mkParent(".graft-compact-legacy")
     val tmpMeta = Paths.get(dir, "._padawan_metadata.json.tmp-x")
@@ -625,6 +692,8 @@ class MaintenanceSpec extends AnyFunSuite {
     assert(!Files.exists(dead), "abandoned stage must be reclaimed")
     assert(!Files.exists(parentDead),
       "abandoned parent-level stage must be reclaimed")
+    assert(!Files.exists(reclusterDead),
+      "a crashed recluster's parent-level stage must be reclaimed")
     assert(!Files.exists(tmpMeta), "metadata temp must be reclaimed")
     assert(Files.exists(fresh), "an in-flight stage must survive")
     assert(Files.exists(unknown), "unknown dot entries are never touched")
@@ -1312,6 +1381,28 @@ class MaintenanceSpec extends AnyFunSuite {
     assert(after3.filter(col("k") === 26L).head().getString(2)
       == "racer")
     assert(after3.filter(col("k") === 27L).head().getString(2) == "v27")
+
+    // 4. a sink APPEND during a recluster is rebased over too: the
+    //    reclustered files and the appended rows both land
+    val rdir = tempDir("maint-occ-recluster") + "/ds"
+    writeKeyed(rdir, 200, 50)
+    val replaced = Sidecar.load(spark, rdir).files.toSet
+    Maintenance.beforeRowLevelInstall = () => {
+      Maintenance.beforeRowLevelInstall = () => ()
+      keyedDF(10000, 5).write.format("graft").option("index", "k")
+        .mode("append").save(rdir)
+    }
+    try {
+      val r = Maintenance.recluster(spark, rdir)
+      assert(r.rewritten == 4, r.toString)
+    } finally Maintenance.beforeRowLevelInstall = () => ()
+    val reclustered = PDataset.scanParquet(spark, rdir)
+    checkBoundsAndSizes(reclustered)
+    assert(reclustered.isDisjoint)
+    assert(Sidecar.load(spark, rdir).files.toSet.intersect(replaced).isEmpty,
+      "the recluster must have installed")
+    assertSameRows(reclustered.toDF,
+      keyedDF(0, 200).unionByName(keyedDF(10000, 5)))
   }
 
   test("a concurrent DV DELETE on an affected file aborts the rewrite " +
@@ -1365,6 +1456,36 @@ class MaintenanceSpec extends AnyFunSuite {
     assert(live2.filter(col("k") === 150L).isEmpty,
       "the untouched-file mark must survive the rewrite's compaction")
     assert(live2.filter(col("k") === 25L).head().getString(2) == "UPD")
+
+    // compact and deleteRange replace files through the same install:
+    // a mark landing on a file they replace aborts them too
+    Seq[(String, Long, String => Unit)](
+      ("compact", 30L, d => Maintenance.compact(spark, d, targetRows = 100)),
+      ("deleteRange", 55L, d => Maintenance.deleteRange(spark, d,
+        lb = Vector(Some(60L)), ub = Vector(Some(100L))))
+    ).foreach { case (op, marked, run) =>
+      val d = tempDir(s"maint-occ-dv-$op") + "/ds"
+      writeKeyed(d, 200, 50)
+      Maintenance.beforeRowLevelInstall = () => {
+        Maintenance.beforeRowLevelInstall = () => ()
+        DeletionVectors.deleteKeys(spark, d, Seq(marked).toDF("k"))
+        ()
+      }
+      val e = try intercept[java.util.ConcurrentModificationException] {
+        run(d)
+      } finally Maintenance.beforeRowLevelInstall = () => ()
+      assert(e.getMessage.contains("deletion-vector"), s"$op: ${e.getMessage}")
+      val live = DeletionVectors.scan(spark, d)
+      assert(live.count() == 199, op)
+      assert(live.filter(col("k") === marked).isEmpty,
+        s"$op resurrected the DV-deleted row")
+      val md = Sidecar.load(spark, d)
+      val disk = new java.io.File(d).listFiles()
+        .map(_.getName).filter(n => n.endsWith(".parquet") &&
+          !n.startsWith("_") && !n.startsWith(".")).toSet
+      assert(disk == md.files.toSet,
+        s"$op: orphans or missing: disk=$disk sidecar=${md.files.toSet}")
+    }
   }
 
   test("materialize rebases over a concurrent upsert on an untouched " +
@@ -1454,6 +1575,18 @@ class MaintenanceSpec extends AnyFunSuite {
     assert(r2.rewritten == 1)
     assert(PDataset.scanParquet(spark, dir).toDF
       .filter(col("id") === 61L).head().getString(2) == "UPD")
+    // compact orders its merge by the file row index, read through
+    // the renamed projection; the merged file keeps the physical names
+    val r3 = Maintenance.compact(spark, dir, targetRows = 200)
+    assert(r3.created == 1 && r3.merged == 4, r3.toString)
+    val merged = Sidecar.load(spark, dir).files
+    assert(merged.length == 1)
+    assert(spark.read.parquet(s"$dir/${merged.head}").columns.toSeq ==
+      Seq("k", "grp", "payload"))
+    val compacted = PDataset.scanParquet(spark, dir).toDF
+    assert(compacted.count() == 200)
+    assert(compacted.filter(col("id") === 60L).head().getString(2) == "NEW")
+    assert(compacted.filter(col("id") === 61L).head().getString(2) == "UPD")
   }
 
   test("change feed spans a column rename: pre-rename generations " +
