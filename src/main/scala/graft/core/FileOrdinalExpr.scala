@@ -6,9 +6,10 @@ import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCo
 import org.apache.spark.sql.types.{DataType, IntegerType}
 import org.apache.spark.unsafe.types.UTF8String
 
-/** Maps `input_file_name()` to the ordinal of that file in a dataset's
-  * partition list — the row tag for the one-job scatter rewrite of a
-  * file-backed dataset ([[PDataset.writeParquet]]'s generic path).
+/** Maps `input_file_name()` to the ordinal of that file in a list —
+  * the row tag of every one-job scatter rewrite of files: a
+  * file-backed dataset's [[PDataset.writeParquet]], and the
+  * maintenance rewrites (compact, deleteRange, the row-level ops).
   *
   * The file map rides along as one task-serialized reference object
   * (O(npartitions) strings, the same driver metadata the dataset

@@ -7,8 +7,6 @@ import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types.StructType
 
 import scala.collection.mutable.ArrayBuffer
-import scala.concurrent.{Await, ExecutionContext, Future}
-import scala.concurrent.duration.{Duration => SDuration}
 
 import Lex.Bound
 import Stats.PartStats
@@ -48,17 +46,19 @@ final class PDataset private[core] (
     private val lbsOpt0: Option[IndexedSeq[Bound]],
     private val ubsOpt0: Option[IndexedSeq[Bound]],
     private val schemaOpt: Option[StructType],
-    /** Set by [[repartition]]: enables the single-shuffle write fast
-      * path (reference: `repartitioned_dataset.py:246-341`). */
+    /** Set by [[repartition]]: [[writeParquet]] tags rows with the
+      * division router over the source, one scan for all partitions
+      * (reference: `repartitioned_dataset.py:246-341`). */
     private[core] val fastWritePlan: Option[PDataset.FastWritePlan] = None,
     /** Set by [[join]]: a whole-frame plan equivalent to the union of
       * all partitions that [[toDF]] prefers — one Catalyst join node
       * instead of O(npartitions) unioned per-division joins, whose plan
       * size would bottleneck the driver at thousands of divisions. */
     private[core] val wholeFrameOpt: Option[() => DataFrame] = None,
-    /** Set by row-mode [[repartition]]: enables the two-pass scatter
-      * write (count per scan task, then one tagged shuffle) instead of
-      * per-output-partition RowSlicer re-execution. */
+    /** Set by row-mode [[repartition]]: [[writeParquet]] tags rows with
+      * a two-pass global row ordinal (count per scan task, then one
+      * tagged shuffle) instead of re-executing the RowSlicer per
+      * output partition. */
     private[core] val rowWritePlan: Option[PDataset.RowWritePlan] = None) {
 
   import PDataset._
@@ -108,20 +108,28 @@ final class PDataset private[core] (
 
   private def partDF(p: Part): DataFrame = p match {
     case FilePart(file, filters, fmt, renames) =>
-      var reader = spark.read.format(fmt)
-      val toPhys = renames.map(_.swap)
-      schemaOpt.foreach(s => reader = reader.schema(
-        if (renames.isEmpty) s
-        else StructType(s.fields.map(f =>
-          f.copy(name = toPhys.getOrElse(f.name, f.name))))))
-      if (fmt == "csv") reader = reader.option("header", "true")
-      val base =
-        if (renames.isEmpty) reader.load(file)
-        else reader.load(file).withColumnsRenamed(renames)
-      filters.foldLeft(base)((df, f) => df.filter(f.toColumn))
+      filters.foldLeft(readFiles(fmt, Seq(file), renames))(
+        (df, f) => df.filter(f.toColumn))
     case LazyPart(thunk) => thunk()
     case SlicePart(src, lo, hi) =>
       src.slice(lo.orNull, hi.orNull, inclusive = "lower").toDF
+  }
+
+  /** `files` of one format as ONE relation under this dataset's
+    * schema. `renames` (physical → logical) gives the reader the
+    * on-disk names and restores the logical ones with a rename
+    * Project, which Catalyst collapses into the scan. */
+  private def readFiles(
+      fmt: String, files: Seq[String], renames: Map[String, String]): DataFrame = {
+    var reader = spark.read.format(fmt)
+    val toPhys = renames.map(_.swap)
+    schemaOpt.foreach(s => reader = reader.schema(
+      if (renames.isEmpty) s
+      else StructType(s.fields.map(f =>
+        f.copy(name = toPhys.getOrElse(f.name, f.name))))))
+    if (fmt == "csv") reader = reader.option("header", "true")
+    val df = reader.load(files: _*)
+    if (renames.isEmpty) df else df.withColumnsRenamed(renames)
   }
 
   private def partThunks: IndexedSeq[() => DataFrame] = {
@@ -196,11 +204,6 @@ final class PDataset private[core] (
         fps.map(_.renames).distinct.length == 1) {
       val fmt = fps.head.fmt
       val renames = fps.head.renames // physical → logical
-      val toPhys = renames.map(_.swap)
-      def physSchema(s: StructType): StructType =
-        if (renames.isEmpty) s
-        else StructType(s.fields.map(f =>
-          f.copy(name = toPhys.getOrElse(f.name, f.name))))
       val allFilters = fps.flatMap(_.filters).distinctBy(_.signature)
       val globallySafe =
         allFilters.isEmpty || (knownBounds && fps.indices.forall { i =>
@@ -226,13 +229,7 @@ final class PDataset private[core] (
               spark, fps.map(_.file), schemaOpt.get, indexColumns,
               lbsOpt.get, ubsOpt.get, rowCounts = sizesOpt,
               renames = renames.map(_.swap))
-          else {
-            var reader = spark.read.format(fmt)
-            schemaOpt.foreach(s => reader = reader.schema(physSchema(s)))
-            if (fmt == "csv") reader = reader.option("header", "true")
-            val ld = reader.load(fps.map(_.file): _*)
-            if (renames.isEmpty) ld else ld.withColumnsRenamed(renames)
-          }
+          else readFiles(fmt, fps.map(_.file), renames)
         return allFilters.foldLeft(base)((df, f) => df.filter(f.toColumn))
       }
     }
@@ -242,16 +239,7 @@ final class PDataset private[core] (
     var runFmt = "parquet"
     var runRenames: Map[String, String] = Map.empty
     def flushRun(): Unit = if (run.nonEmpty) {
-      var reader = spark.read.format(runFmt)
-      val toPhys = runRenames.map(_.swap)
-      schemaOpt.foreach(s => reader = reader.schema(
-        if (runRenames.isEmpty) s
-        else StructType(s.fields.map(f =>
-          f.copy(name = toPhys.getOrElse(f.name, f.name))))))
-      if (runFmt == "csv") reader = reader.option("header", "true")
-      val df = reader.load(run.toSeq: _*)
-      pieces += (if (runRenames.isEmpty) df
-        else df.withColumnsRenamed(runRenames))
+      pieces += readFiles(runFmt, run.toSeq, runRenames)
       run.clear()
     }
     parts.foreach {
@@ -979,37 +967,77 @@ final class PDataset private[core] (
 
   /** Persist as one `part##########.parquet` per non-empty partition
     * plus the two sidecars; `append = true` extends an existing dataset
-    * (index columns must match). Returns the written dataset re-scanned.
+    * (index columns must match; the target's schema stays
+    * authoritative). Returns the written dataset re-scanned.
     *
-    * Fresh repartitioned datasets take a single-shuffle fast path: one
-    * job tags rows with their target partition, shuffles once, and the
-    * file sink writes every partition file in parallel (the Spark
-    * analogue of the reference's one-pass scatter writer,
-    * repartitioned_dataset.py:246-341).
+    * Every shape writes through ONE tagged-shuffle job, the Spark
+    * analogue of the reference's one-pass scatter writer
+    * (repartitioned_dataset.py:246-341): rows are tagged with their
+    * target partition ([[scatterTagged]]), shuffled once, and the file
+    * sink writes every partition file in parallel. Row counts and
+    * bounds come from planning when known, else from one stats job
+    * over the written files. A fresh write replaces the directory. An
+    * append numbers its files past the target's max partition index
+    * and commits through [[graft.operators.Maintenance.installCommit]]:
+    * sidecar extras (txn ledgers, table options) survive, a concurrent
+    * commit on the target is rebased over, a conflicting one aborts
+    * the append and removes its files, and Bloom / column-stats
+    * sidecars extend to the new files.
     */
   def writeParquet(path: String, append: Boolean = false): PDataset = {
     // CHECK constraints recorded on an append target guard the rows
     // being added — one aggregate pass over THIS dataset (the delta).
     if (append)
       graft.operators.Constraints.enforce(spark, path, toDF, "append")
-    fastWritePlan.orElse(derivedWritePlan) match {
-      case Some(plan) if plan.divisions.nonEmpty =>
-        fastWriteParquet(path, plan, append)
-      case _ => rowWritePlan match {
-        case Some(plan) if parts.length > 1 =>
-          rowScatterWriteParquet(path, plan, append)
-        case _ => genericWriteParquet(path, append)
+    val (fs, dir) = GraftFs.resolve(spark, path)
+    val prior = prepareWriteTarget(fs, dir, path, append)
+    val offset = prior.map(_._1.maxPartitionIndex + 1).getOrElse(0L)
+    val written: IndexedSeq[(Int, String)] =
+      if (parts.isEmpty) Vector.empty
+      else {
+        val (tagged, orderCols) = scatterTagged
+        val stage = GraftFs.mkStageDir(fs,
+          Option(dir.getParent).getOrElse(dir), ".graft-scatter-", dir.getName)
+        try ScatterWrite.partFiles(spark, tagged, parts.length, fs, dir,
+          stage, i => Sidecar.partitionFileName(offset + i), orderCols)
+        finally GraftFs.deleteRecursive(fs, stage)
       }
+    def pathOf(f: String): String = new HPath(dir, f).toString
+    val entries: IndexedSeq[(String, Long, Bound, Bound)] =
+      if (knownSizes && knownBounds)
+        written.map { case (i, f) =>
+          (f, sizesOpt.get(i), lbsOpt.get(i), ubsOpt.get(i)) }
+      else {
+        val byFile = Stats.forFiles(spark, written.map(w => pathOf(w._2)),
+          indexColumns, schemaOpt)
+        written.map { case (_, f) =>
+          val st = byFile(Stats.normalizePath(pathOf(f)))
+          (f, st.size, st.lb, st.ub)
+        }
+      }
+    prior match {
+      case Some((m0, fp0)) =>
+        graft.operators.Maintenance.installCommit(spark, path, fs, dir,
+          m0, fp0, Map.empty, parts.length, retain = false, "append",
+          Set.empty, added = entries)
+      case None =>
+        Sidecar.write(spark, path, indexColumns, entries.map(_._1),
+          entries.map(_._2), entries.map(_._3), entries.map(_._4),
+          parts.length - 1L, schemaOpt.getOrElse(this(0).schema))
     }
+    PDataset.scanParquet(spark, path)
   }
 
-  /** Prepare the target directory for a write; Some(prior metadata)
-    * when appending (index columns validated against this dataset). */
+  /** Prepare the target directory for a write: a fresh write empties
+    * it; an append validates this dataset against the target and
+    * returns the target's metadata with the sidecar fingerprint taken
+    * just BEFORE loading it (what the commit's concurrency guard
+    * compares against). */
   private def prepareWriteTarget(
       fs: org.apache.hadoop.fs.FileSystem,
       dir: HPath,
       path: String,
-      append: Boolean): Option[Sidecar.Meta] = {
+      append: Boolean): Option[(Sidecar.Meta, (Long, Long))] = {
     if (!append) {
       GraftFs.deleteRecursive(fs, dir)
       GraftFs.mkdirs(fs, dir)
@@ -1017,6 +1045,7 @@ final class PDataset private[core] (
     } else {
       if (!Sidecar.exists(spark, path))
         throw new AppendError(s"Could not load metadata in '$path'.")
+      val fp = graft.operators.Maintenance.metaFingerprint(spark, dir)
       val m = Sidecar.load(spark, path)
       if (m.columnRenames.nonEmpty)
         throw new AppendError(
@@ -1033,14 +1062,16 @@ final class PDataset private[core] (
       // omit evolved columns (its files null-fill at read) but may
       // not carry unknown columns or conflicting types — silently
       // adopting the appender's schema would revert an addColumns or
-      // resurrect a dropColumns.
+      // resurrect a dropColumns. Types compare modulo nullability at
+      // every nesting level, as the graft sink's append does.
       schemaOpt.foreach { s =>
         s.fields.foreach { f =>
           m.schema.fields.find(_.name == f.name) match {
             case None => throw new AppendError(
               s"Appended column ${f.name} does not exist in the target " +
                 "dataset; run Maintenance.addColumns first.")
-            case Some(tf) if tf.dataType != f.dataType =>
+            case Some(tf) if !org.apache.spark.sql.GraftBridge
+                .sameTypeIgnoreNullability(tf.dataType, f.dataType) =>
               throw new AppendError(
                 s"Appended column ${f.name}: ${f.dataType.simpleString} " +
                   s"conflicts with the target's ${tf.dataType.simpleString}.")
@@ -1048,7 +1079,7 @@ final class PDataset private[core] (
           }
         }
       }
-      Some(m)
+      Some((m, fp))
     }
   }
 
@@ -1069,253 +1100,82 @@ final class PDataset private[core] (
         FastWritePlan(source, this.indexColumns, divs)
     }
 
-  private def genericWriteParquet(path: String, append: Boolean): PDataset = {
-    val (fs, dir) = GraftFs.resolve(spark, path)
-    val prior = prepareWriteTarget(fs, dir, path, append)
-    val offset = prior.map(_.maxPartitionIndex + 1).getOrElse(0L)
-    val fileNames =
-      parts.indices.map(i => Sidecar.partitionFileName(offset + i))
-
-    // 1. Write every partition, as (partition index, file name) pairs
-    //    actually written. A wide file-backed dataset rewrites in ONE
-    //    tagged-shuffle job (per-partition jobs are a driver-side job
-    //    storm at 10^4-10^5 partitions); otherwise concurrent driver
-    //    threads issue the per-partition jobs in parallel.
-    val written: IndexedSeq[(Int, String)] = scatterSourceFiles match {
-      case Some((srcFiles, renames)) =>
-        val stageParent = Option(dir.getParent).getOrElse(dir)
-        val stage = GraftFs.mkStageDir(fs, stageParent, ".graft-scatter-",
-          dir.getName)
-        try {
-          var reader = spark.read.format("parquet")
-          val toPhys = renames.map(_.swap)
-          schemaOpt.foreach(s => reader = reader.schema(
-            if (renames.isEmpty) s
-            else StructType(s.fields.map(f =>
-              f.copy(name = toPhys.getOrElse(f.name, f.name))))))
-          val ord = new FileOrdinal(srcFiles.zipWithIndex.map {
-            case (f, i) => Stats.normalizePath(f) -> i
-          }.toMap)
-          val loaded = reader.load(srcFiles: _*)
-          val logical = if (renames.isEmpty) loaded
-            else loaded.withColumnsRenamed(renames)
-          val tagged = logical.withColumn("__part",
-            FileOrdinalExpr.ordinal(input_file_name(), ord))
-          scatterPartFiles(tagged, parts.length, fs, dir, stage, fileNames)
-        } finally GraftFs.deleteRecursive(fs, stage)
-      case None =>
-        implicit val ec: ExecutionContext = PDataset.writeEc
-        val writes = parts.indices.map { i =>
-          Future {
-            Sidecar.writeSingleParquet(
-              this(i), new HPath(dir, fileNames(i)).toString)
-          }
-        }
-        writes.foreach(Await.result(_, SDuration.Inf))
-        parts.indices.map(i => (i, fileNames(i)))
+  /** This dataset's rows tagged with their target partition (an int
+    * `__part`), plus the synthetic columns that restore each
+    * partition's row order after the shuffle. The tagger follows the
+    * dataset's shape:
+    *   - a division plan (a repartition, or a contiguous slice run of
+    *     one): the O(log d) division router over the source; no order
+    *     column;
+    *   - a row plan over several partitions: the two-pass global row
+    *     ordinal ([[rowOrdinalTagged]]);
+    *   - distinct filter-free parquet files: ONE relation tagged by
+    *     file ordinal, ordered by the row's position in its file
+    *     (exact however many splits a file spans);
+    *   - anything else (lazy plans, sliced or repeated files, other
+    *     formats): the partitions unioned in order, ordered by
+    *     `monotonically_increasing_id` taken before the shuffle — scan
+    *     task, then position within the task, which is each
+    *     partition's own row order. */
+  private def scatterTagged: (DataFrame, Seq[String]) = {
+    val files = parts.collect { case FilePart(f, Nil, "parquet", rn) => (f, rn) }
+    (fastWritePlan.orElse(derivedWritePlan), rowWritePlan) match {
+      case (Some(plan), _) if plan.divisions.nonEmpty =>
+        (plan.source.toDF.withColumn("__part",
+          partitionIndexExpr(plan.cols.map(col), plan.divisions)), Nil)
+      case (_, Some(plan)) if parts.length > 1 =>
+        (rowOrdinalTagged(plan), Seq("__ord"))
+      case _ if files.length == parts.length &&
+          files.map(_._2).distinct.length == 1 &&
+          files.map(_._1).distinct.length == files.length =>
+        val ord = new FileOrdinal(files.zipWithIndex.map {
+          case ((f, _), i) => Stats.normalizePath(f) -> i
+        }.toMap)
+        (readFiles("parquet", files.map(_._1), files.head._2)
+          .withColumn("__part", FileOrdinalExpr.ordinal(input_file_name(), ord))
+          .withColumn("__row", col("_metadata.row_index")), Seq("__row"))
+      case _ =>
+        (parts.indices.map(i => this(i).withColumn("__part", lit(i)))
+          .reduceLeft(_.union(_))
+          .withColumn("__ord", monotonically_increasing_id()), Seq("__ord"))
     }
-
-    // 2. Stats: reuse known metadata, else ONE job over the written files.
-    val statsByIdx: Map[Int, PartStats] =
-      if (knownSizes && knownBounds)
-        parts.indices.map(i =>
-          i -> PartStats(sizesOpt.get(i), lbsOpt.get(i), ubsOpt.get(i))).toMap
-      else {
-        val paths = written.map { case (_, f) => new HPath(dir, f).toString }
-        val byFile = Stats.forFiles(spark, paths, this.indexColumns, schemaOpt)
-        written.map { case (i, f) =>
-          i -> byFile.getOrElse(
-            Stats.normalizePath(new HPath(dir, f).toString),
-            PartStats(0L, emptyIdxBound, emptyIdxBound))
-        }.toMap
-      }
-
-    // 3. Drop empty partitions (file deleted if present, not listed in
-    //    metadata; the scatter path never materializes them at all).
-    val nameOfIdx = written.toMap
-    val keep = written.map(_._1).filter(i => statsByIdx(i).size > 0)
-    val keepSet = keep.toSet // Seq.contains would be O(n^2) at 10^5 parts
-    written.map(_._1).filterNot(keepSet).foreach { i =>
-      fs.delete(new HPath(dir, nameOfIdx(i)), false)
-    }
-    // On append the PRIOR (possibly evolved) schema stays
-    // authoritative; prepareWriteTarget already proved compatibility.
-    val schema = prior.map(_.schema).getOrElse(
-      schemaOpt.getOrElse(
-        if (parts.nonEmpty) this(0).schema
-        else throw new IllegalStateException("schema unknown for empty dataset")))
-
-    val allFiles = prior.map(_.files).getOrElse(Vector.empty) ++
-      keep.map(nameOfIdx)
-    val allSizes = prior.map(_.sizes).getOrElse(Vector.empty) ++
-      keep.map(i => statsByIdx(i).size)
-    val allLbs = prior.map(_.lowerBounds).getOrElse(Vector.empty) ++
-      keep.map(i => Option(statsByIdx(i).lb).getOrElse(emptyIdxBound))
-    val allUbs = prior.map(_.upperBounds).getOrElse(Vector.empty) ++
-      keep.map(i => Option(statsByIdx(i).ub).getOrElse(emptyIdxBound))
-    Sidecar.write(spark, path, this.indexColumns, allFiles, allSizes,
-      allLbs, allUbs, offset + parts.length - 1, schema)
-    PDataset.scanParquet(spark, path)
   }
 
-  /** The source files for a one-job scatter rewrite, if this dataset
-    * qualifies: at least [[PDataset.scatterWriteThreshold]] partitions,
-    * every partition a filter-free parquet file, no file repeated
-    * (repeats would collapse two partitions onto one ordinal), and
-    * every file at most one input split. The split bound preserves
-    * intra-partition row order: a whole file read by ONE map task
-    * lands in its target reduce partition in file order, while a
-    * multi-split file's blocks would interleave nondeterministically —
-    * the per-partition fallback keeps exact order for those. */
-  private def scatterSourceFiles
-      : Option[(IndexedSeq[String], Map[String, String])] = {
-    if (parts.length < PDataset.scatterWriteThreshold) return None
-    val fps = parts.collect { case FilePart(f, Nil, "parquet", rn) => (f, rn) }
-    if (fps.length != parts.length ||
-        fps.map(_._2).distinct.length > 1) return None
-    val files = fps.map(_._1)
-    if (files.distinct.length != files.length) return None
-    val renames = fps.head._2
-    val maxSplit =
-      org.apache.spark.sql.internal.SQLConf.get.filesMaxPartitionBytes
-    val sizes = GraftFs.fileSizes(GraftFs.conf(spark), files)
-    if (sizes.forall(_._2 <= maxSplit)) Some((files, renames)) else None
+  /** Tagger for row-mode repartitions: pass 1 counts rows per scan
+    * task (column-pruned — a metadata-cheap scan), the driver
+    * prefix-sums them into per-task global offsets, pass 2 tags every
+    * row with its global ordinal `__ord` (task offset + the local
+    * ordinal carried by `monotonically_increasing_id`) hence its
+    * target partition. O(1) jobs and 2 source passes for ANY output
+    * partition count, where per-partition RowSlicer writes cost one
+    * source pass per output partition. Both passes plan the same
+    * per-partition union (never the merged whole-frame relation, whose
+    * split packing reorders files), so task numbering and in-task row
+    * order agree between them for deterministic sources. */
+  private def rowOrdinalTagged(plan: RowWritePlan): DataFrame = {
+    import org.apache.spark.sql.types.{IntegerType, LongType, StructField}
+    val base = plan.base
+    val u = base.parts.indices.map(i => base(i)).reduceLeft(_.union(_))
+    val counts = u.select(spark_partition_id().as("__pid"))
+      .groupBy(col("__pid")).agg(count(lit(1)).as("__n"))
+      .collect().map(r => (r.getInt(0), r.getLong(1))).sortBy(_._1)
+    val starts = counts.map(_._2).scanLeft(0L)(_ + _)
+    val startRows: Seq[Row] =
+      counts.map(_._1).zip(starts).map { case (pid, s) => Row(pid, s) }.toSeq
+    val startsDF = spark.createDataFrame(
+      java.util.Arrays.asList(startRows: _*),
+      StructType(Seq(StructField("__pid", IntegerType, nullable = false),
+        StructField("__start", LongType, nullable = false))))
+    u.withColumn("__pid", spark_partition_id())
+      .withColumn("__mono", monotonically_increasing_id())
+      .join(broadcast(startsDF), "__pid")
+      // local ordinal = the low 33 bits of monotonically_increasing_id
+      .withColumn("__ord",
+        col("__start") + col("__mono").bitwiseAND(lit((1L << 33) - 1)))
+      .withColumn("__part",
+        expr(s"__ord div ${plan.rowsPerPartition}").cast(IntegerType))
+      .drop("__pid", "__mono", "__start")
   }
-
-  private def emptyIdxBound: Bound = Vector.fill(indexColumns.length)(None)
-
-  /** One-shuffle scatter write: tag rows with their target partition id
-    * via the O(log d) division router, hash-repartition on it, and let
-    * the parquet sink write one file per partition in parallel. With
-    * `append = true` the same single job extends an existing dataset:
-    * new files are numbered past the prior max partition index and the
-    * sidecar metadata is merged (index columns must match). */
-  private def fastWriteParquet(
-      path: String, plan: FastWritePlan, append: Boolean): PDataset = {
-    val (fs, dir) = GraftFs.resolve(spark, path)
-    val prior = prepareWriteTarget(fs, dir, path, append)
-    val offset = prior.map(_.maxPartitionIndex + 1).getOrElse(0L)
-    val stageParent = Option(dir.getParent).getOrElse(dir)
-    val stage = GraftFs.mkStageDir(fs, stageParent, ".graft-fastwrite-",
-      dir.getName)
-    try {
-      val idx = plan.cols.map(col)
-      val tagged = plan.source.toDF.withColumn(
-        "__part", PDataset.partitionIndexExpr(idx, plan.divisions))
-      val written = scatterPartFiles(tagged, parts.length, fs, dir, stage,
-        i => Sidecar.partitionFileName(offset + i))
-
-      // Stats: exact from planning when sampleFraction = 1, else one
-      // file-grouped job over what we just wrote.
-      val (sizesW, lbsW, ubsW) =
-        if (knownSizes && knownBounds) {
-          val keepIdx = written.map(_._1)
-          (keepIdx.map(sizesOpt.get), keepIdx.map(lbsOpt.get), keepIdx.map(ubsOpt.get))
-        } else {
-          val byFile = Stats.forFiles(spark,
-            written.map(w => new HPath(dir, w._2).toString).toSeq,
-            plan.cols, plan.source.schemaOpt)
-          val sts = written.map(w =>
-            byFile(Stats.normalizePath(new HPath(dir, w._2).toString)))
-          (sts.map(_.size), sts.map(_.lb), sts.map(_.ub))
-        }
-      val schema = prior.map(_.schema).getOrElse(
-        plan.source.schemaOpt.getOrElse(plan.source(0).schema))
-      val maxIdx =
-        if (written.isEmpty) offset - 1
-        else offset + written.map(_._1).max.toLong
-      val allFiles = prior.map(_.files).getOrElse(Vector.empty) ++
-        written.map(_._2)
-      val allSizes = prior.map(_.sizes).getOrElse(Vector.empty) ++ sizesW
-      val allLbs = prior.map(_.lowerBounds).getOrElse(Vector.empty) ++ lbsW
-      val allUbs = prior.map(_.upperBounds).getOrElse(Vector.empty) ++ ubsW
-      Sidecar.write(spark, path, plan.cols, allFiles, allSizes,
-        allLbs, allUbs, maxIdx, schema)
-      PDataset.scanParquet(spark, path)
-    } finally GraftFs.deleteRecursive(fs, stage)
-  }
-
-  /** Two-pass scatter write for row-mode repartitions: pass 1 counts
-    * rows per scan task (column-pruned — a metadata-cheap scan), the
-    * driver prefix-sums them into per-task global offsets, pass 2 tags
-    * every row with its global ordinal (task offset + the local ordinal
-    * carried by `monotonically_increasing_id`) hence its target
-    * partition, and the shared one-shuffle scatter writes all files,
-    * restoring row order per partition by sorting on the ordinal. O(1)
-    * jobs and 2 source passes for ANY output partition count, where
-    * per-partition RowSlicer writes cost one source pass per output
-    * partition. Both passes plan the same per-partition union (never
-    * the merged whole-frame relation, whose split packing reorders
-    * files), so task numbering and in-task row order agree between
-    * them for deterministic sources. */
-  private def rowScatterWriteParquet(
-      path: String, plan: RowWritePlan, append: Boolean): PDataset = {
-    import org.apache.spark.sql.types.{IntegerType, LongType, StructField, StructType}
-    val (fs, dir) = GraftFs.resolve(spark, path)
-    val prior = prepareWriteTarget(fs, dir, path, append)
-    val offset = prior.map(_.maxPartitionIndex + 1).getOrElse(0L)
-    val stageParent = Option(dir.getParent).getOrElse(dir)
-    val stage = GraftFs.mkStageDir(fs, stageParent, ".graft-rowscatter-",
-      dir.getName)
-    try {
-      val base = plan.base
-      val u = base.parts.indices.map(i => base(i)).reduceLeft(_.union(_))
-      val counts = u.select(spark_partition_id().as("__pid"))
-        .groupBy(col("__pid")).agg(count(lit(1)).as("__n"))
-        .collect().map(r => (r.getInt(0), r.getLong(1))).sortBy(_._1)
-      val starts = counts.map(_._2).scanLeft(0L)(_ + _)
-      val startRows: Seq[Row] =
-        counts.map(_._1).zip(starts).map { case (pid, s) => Row(pid, s) }.toSeq
-      val startsDF = spark.createDataFrame(
-        java.util.Arrays.asList(startRows: _*),
-        StructType(Seq(StructField("__pid", IntegerType, nullable = false),
-          StructField("__start", LongType, nullable = false))))
-      val tagged = u
-        .withColumn("__pid", spark_partition_id())
-        .withColumn("__mono", monotonically_increasing_id())
-        .join(broadcast(startsDF), "__pid")
-        // local ordinal = the low 33 bits of monotonically_increasing_id
-        .withColumn("__ord",
-          col("__start") + col("__mono").bitwiseAND(lit((1L << 33) - 1)))
-        .withColumn("__part",
-          expr(s"__ord div ${plan.rowsPerPartition}").cast(IntegerType))
-        .drop("__pid", "__mono", "__start")
-      val written = scatterPartFiles(tagged, parts.length, fs, dir, stage,
-        i => Sidecar.partitionFileName(offset + i), orderCol = Some("__ord"))
-
-      // Row-mode stats are exact from planning: sizes by construction,
-      // bounds are the empty tuples of an index-less dataset.
-      val keepIdx = written.map(_._1)
-      val schema = prior.map(_.schema).getOrElse(
-        base.schemaOpt.getOrElse(base(0).schema))
-      val maxIdx =
-        if (written.isEmpty) offset - 1
-        else offset + written.map(_._1).max.toLong
-      Sidecar.write(spark, path, Seq.empty,
-        prior.map(_.files).getOrElse(Vector.empty) ++ written.map(_._2),
-        prior.map(_.sizes).getOrElse(Vector.empty) ++ keepIdx.map(sizesOpt.get),
-        prior.map(_.lowerBounds).getOrElse(Vector.empty) ++
-          keepIdx.map(_ => Lex.emptyBound),
-        prior.map(_.upperBounds).getOrElse(Vector.empty) ++
-          keepIdx.map(_ => Lex.emptyBound),
-        maxIdx, schema)
-      PDataset.scanParquet(spark, path)
-    } finally GraftFs.deleteRecursive(fs, stage)
-  }
-
-  /** One-shuffle scatter core (see [[ScatterWrite.partFiles]]) used by
-    * the repartition fast path, the row-mode write and the wide
-    * file-backed generic rewrite. */
-  private def scatterPartFiles(
-      tagged: DataFrame,
-      nparts: Int,
-      fs: org.apache.hadoop.fs.FileSystem,
-      dir: HPath,
-      stage: HPath,
-      nameOf: Int => String,
-      orderCol: Option[String] = None): IndexedSeq[(Int, String)] =
-    ScatterWrite.partFiles(
-      spark, tagged, nparts, fs, dir, stage, nameOf, orderCol.toSeq)
 }
 
 /** Parallel row-range slicing of one parent partition (the zipWithIndex
@@ -1488,18 +1348,6 @@ object PDataset {
   private[graft] def divisionJoinMinDivisions(spark: SparkSession): Int =
     divisionJoinMinOverride.getOrElse(
       math.max(2, spark.sparkContext.defaultParallelism / 2))
-
-  /** Partition count at or above which a file-backed generic write
-    * batches into one tagged-shuffle job instead of one job per
-    * partition: per-partition jobs are shuffle-free and fine at tens
-    * of partitions, a driver-side job storm at 10^4. Var so specs can
-    * exercise the scatter path on small fixtures. */
-  private[graft] var scatterWriteThreshold: Int = 32
-
-  private[graft] lazy val writeEc: ExecutionContext =
-    ExecutionContext.fromExecutorService(
-      java.util.concurrent.Executors.newFixedThreadPool(8,
-        r => { val t = new Thread(r, "graft-write"); t.setDaemon(true); t }))
 
   /** Open a persisted dataset: load sidecar metadata if present (stats
     * known before any job); else glob `*.parquet` (sorted) with unknown

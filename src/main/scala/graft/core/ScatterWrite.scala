@@ -7,9 +7,10 @@ import org.apache.spark.sql.functions.col
 
 import scala.collection.mutable.ArrayBuffer
 
-/** One-shuffle scatter write shared by [[PDataset.writeParquet]]'s
-  * fast/generic/row paths and the table-maintenance rewrites
-  * ([[graft.operators.Maintenance]]): shuffle a tagged frame once,
+/** One-shuffle scatter write shared by [[PDataset.writeParquet]] (one
+  * call, whatever tagger the dataset's shape picks) and the
+  * table-maintenance rewrites ([[graft.operators.Maintenance]]):
+  * shuffle a tagged frame once,
   * let the parquet sink write every partition in parallel, then move
   * each part's lone file into place — same-FS renames, never a copy.
   */

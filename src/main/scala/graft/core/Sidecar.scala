@@ -352,9 +352,9 @@ object Sidecar {
     * Spark's writer emits a directory; for sidecar-format compatibility we
     * stage into a same-FS temp dir (single task via coalesce(1)) and move
     * the lone part file into place — a same-filesystem `rename`, never a
-    * copy. Used for the schema sidecar and per-partition data files; the
-    * repartition fast path uses a single partitionBy job instead (see
-    * PDataset.writeParquet).
+    * copy. Used for the schema sidecar, Bloom sidecars and the rare
+    * merge of a scatter partition's retried task outputs; data files
+    * are written by one partitionBy job instead (see [[ScatterWrite]]).
     */
   def writeSingleParquet(
       df: DataFrame,

@@ -149,10 +149,11 @@ object DeletionVectors {
       snapshot: Set[String],
       replacedFiles: Set[String],
       op: String): Unit = {
+    if (replacedFiles.isEmpty) return
     val (fs, dirPath) = GraftFs.resolve(spark, dir)
     val fresh = commitDirs(fs, dirPath)
       .filterNot(p => snapshot(p.getName))
-    if (fresh.isEmpty || replacedFiles.isEmpty) return
+    if (fresh.isEmpty) return
     import spark.implicits._
     // overlay entries key by BASE name; replaced sidecar entries may
     // be absolute shallow-clone paths — normalize before matching

@@ -85,11 +85,13 @@ object Maintenance {
   val HistoryDir = "_graft_history"
 
   /** Dot-prefixed crash debris [[vacuum]] may reclaim: scatter /
-    * fast-write / z-order / txn-seed stage directories and
-    * metadata-swap temp files a crashed op never cleaned up. An
-    * explicit allowlist — vacuum never touches an unknown dot entry
-    * (checkpoints, OS droppings), and `_graft_*` / `_padawan_*`
-    * sidecars don't match any prefix here. */
+    * z-order / txn-seed / rewrite stage directories and metadata-swap
+    * temp files a crashed op never cleaned up (`.graft-fastwrite-` and
+    * `.graft-rowscatter-` are the write stages of older builds, whose
+    * leftovers still need reclaiming). An explicit allowlist — vacuum
+    * never touches an unknown dot entry (checkpoints, OS droppings),
+    * and `_graft_*` / `_padawan_*` sidecars don't match any prefix
+    * here. */
   private[graft] val DebrisPrefixes: Seq[String] = Seq(
     ".graft-scatter-", ".graft-rowscatter-", ".graft-fastwrite-",
     ".graft-zorder-", ".graft-txn-seed-", ".graft-compact-",
@@ -679,23 +681,27 @@ object Maintenance {
     * but before [[installCommit]] swaps the sidecar — the window a
     * concurrent commit can land in. Every file-replacing op reaches
     * it (compact and its scoped forms, deleteRange, recluster, the
-    * row-level rewrites, DV materialize). No-op in production. */
+    * row-level rewrites, DV materialize), and so does a
+    * [[PDataset.writeParquet]] append. No-op in production. */
   private[graft] var beforeRowLevelInstall: () => Unit = () => ()
 
   /** A sidecar entry: file name, row count, lex lower / upper bound. */
-  private[operators] type Entry = (String, Long, Bound, Bound)
+  private[graft] type Entry = (String, Long, Bound, Bound)
 
-  /** The one commit every file-replacing op installs through, with
-    * bounded OCC rebase-and-retry: the expensive part — the data
-    * rewrite — is already durable, and a concurrent commit that
-    * touched neither this op's INPUT files nor its OUTPUT names (a
-    * sink append, a keyed op on disjoint files) is merged instead of
-    * aborting the op. `replacement` maps each consumed input file name
-    * to the entries that take its place (Nil = dropped, emptied, or
-    * merged into another input's entries); untouched files keep the
-    * LATEST generation's entries, so the concurrent commit's work
-    * survives. `slots` is the number of partition-name slots the op
-    * allocated past `m0.maxPartitionIndex`. Aborts loudly when the
+  /** The one commit every file-replacing op and every
+    * [[PDataset.writeParquet]] append installs through, with bounded
+    * OCC rebase-and-retry: the expensive part — the data write — is
+    * already durable, and a concurrent commit that touched neither
+    * this op's INPUT files nor its OUTPUT names (a sink append, a
+    * keyed op on disjoint files) is merged instead of aborting the
+    * op. `replacement` maps each consumed input file name to the
+    * entries that take its place (Nil = dropped, emptied, or merged
+    * into another input's entries); untouched files keep the LATEST
+    * generation's entries, so the concurrent commit's work survives,
+    * and the `added` entries (an append's new files) follow them. The
+    * sidecar extras (txn and COPY INTO ledgers, table options) carry
+    * over unchanged. `slots` is the number of partition-name slots the
+    * op allocated past `m0.maxPartitionIndex`. Aborts loudly when the
     * concurrent commit rewrote an input file (the Delta
     * concurrent-delete-read case), collided on an output name, changed
     * the schema/index/rename mapping this rewrite was planned against,
@@ -703,7 +709,7 @@ object Maintenance {
     * `dvSnapshot`. After the swap, deletes the replaced files no
     * archived generation references (unless `retain`) and extends the
     * Bloom / column-stats sidecars to the new files. */
-  private[operators] def installCommit(
+  private[graft] def installCommit(
       spark: SparkSession,
       dir: String,
       fs: org.apache.hadoop.fs.FileSystem,
@@ -714,9 +720,10 @@ object Maintenance {
       slots: Int,
       retain: Boolean,
       op: String,
-      dvSnapshot: Set[String]): Unit = {
+      dvSnapshot: Set[String],
+      added: Seq[Entry] = Nil): Unit = {
     beforeRowLevelInstall()
-    val newNames = replacement.values.flatten.map(_._1).toSet
+    val newNames = (replacement.values.flatten ++ added).map(_._1).toSet
     // On a terminal abort, this op's written-but-never-registered
     // files are orphans: remove them so the loser leaves no debris.
     // NEVER delete a name the COMMITTED generation references — on an
@@ -757,7 +764,7 @@ object Maintenance {
         val name = cur.files(p)
         replacement.getOrElse(name, Seq((name, cur.sizes(p),
           cur.lowerBounds(p), cur.upperBounds(p))))
-      }
+      } ++ added
       try {
         guardUnchanged(spark, dirPath, fp)
         if (retain) archiveCurrent(spark, fs, dirPath)
@@ -801,7 +808,7 @@ object Maintenance {
           cur = m2
       }
     }
-    if (!retain)
+    if (!retain && replacement.nonEmpty)
       deletableNow(spark, dir, replacement.keys.toSeq)
         .foreach(f => fs.delete(new HPath(dirPath, f), false))
     refreshBloom(spark, dir)

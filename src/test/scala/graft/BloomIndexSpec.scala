@@ -112,6 +112,13 @@ class BloomIndexSpec extends AnyFunSuite {
     val q = spark.read.format("graft").load(dir)
       .filter(col("doc") === "doc-14000") // k = 2000, in the new file
     assert(q.count() == 1, "appended rows must stay visible")
+    // the append extended the filters to its file: an old value
+    // still plans only its own file
+    val old = spark.read.format("graft").load(dir)
+      .filter(col("doc") === "doc-3500")
+    assert(old.count() == 1)
+    assert(scannedFiles(old) == 1,
+      "the appended file must carry a filter right after the append")
     // rebuild covers the new file again
     BloomIndex.build(spark, dir, Seq("doc", "ref"), fpp = 0.001)
     val q2 = spark.read.format("graft").load(dir)

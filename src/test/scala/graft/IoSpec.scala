@@ -67,6 +67,26 @@ class IoSpec extends AnyFunSuite {
     intercept[graft.core.AppendError](other.writeParquet(out, append = true))
   }
 
+  test("append ignores nested nullability when checking column types") {
+    import org.apache.spark.sql.functions.{array, col, lit}
+    val out = tempDir("graft-io-nested-null") + "/ds.parquet"
+    PDataset.fromDataFrame(spark.range(0, 10).select(col("id").as("k"),
+      array(col("id"), lit(null).cast("bigint")).as("xs")), Seq("k"))
+      .writeParquet(out)
+    assert(Sidecar.load(spark, out).schema("xs").dataType ==
+      ArrayType(LongType, containsNull = true))
+    // the same element type, but never null: the graft sink accepts it
+    val delta = spark.range(10, 20).select(col("id").as("k"),
+      array(col("id")).as("xs"))
+    assert(delta.schema("xs").dataType ==
+      ArrayType(LongType, containsNull = false))
+    val back = PDataset.fromDataFrame(delta, Seq("k"))
+      .writeParquet(out, append = true)
+    assert(back.toDF.count() == 20)
+    assert(back.schemaOption.get("xs").dataType ==
+      ArrayType(LongType, containsNull = true))
+  }
+
   test("empty dataset write preserves schema via sidecar") {
     val schema = StructType(Seq(
       StructField("a", LongType), StructField("b", DoubleType)))

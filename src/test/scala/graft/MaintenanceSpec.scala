@@ -201,6 +201,16 @@ class MaintenanceSpec extends AnyFunSuite {
     assertSameRows(after.toDF, keyedDF(0, 480))
   }
 
+  /** Every data file on disk at `dir` is one its sidecar lists. */
+  private def assertNoOrphans(dir: String): Unit = {
+    val m = Sidecar.load(spark, dir)
+    val onDisk = new java.io.File(dir).listFiles()
+      .map(_.getName).filter(n => n.endsWith(".parquet") &&
+        !n.startsWith("_") && !n.startsWith(".")).toSet
+    assert(onDisk == m.files.toSet,
+      s"orphans or missing files: disk=$onDisk sidecar=${m.files.toSet}")
+  }
+
   /** Pre-create a foreign committer's file at the first name slot an
     * op on `dir` will allocate; returns a check that its bytes and
     * mtime are unchanged and that the sidecar does not list it. */
@@ -1338,13 +1348,7 @@ class MaintenanceSpec extends AnyFunSuite {
       "the concurrent append's rows must survive the rebase")
     assert(after1.filter(col("k") === 25L).head().getString(2) == "UPD")
     assert(after1.filter(col("k") === 10002L).count() == 1)
-    // no orphans: every data file on disk is referenced
-    val m1 = Sidecar.load(spark, dir)
-    val onDisk = new java.io.File(dir).listFiles()
-      .map(_.getName).filter(n => n.endsWith(".parquet") &&
-        !n.startsWith("_") && !n.startsWith(".")).toSet
-    assert(onDisk == m1.files.toSet,
-      s"orphans or missing files: disk=$onDisk sidecar=${m1.files.toSet}")
+    assertNoOrphans(dir)
 
     // 2. a concurrent UPSERT on a DISJOINT file during an upsert:
     //    both land (the second rebases over the first)
@@ -1403,6 +1407,42 @@ class MaintenanceSpec extends AnyFunSuite {
       "the recluster must have installed")
     assertSameRows(reclustered.toDF,
       keyedDF(0, 200).unionByName(keyedDF(10000, 5)))
+
+    // 5. an UPSERT lands during a PDataset APPEND: the append rebases
+    //    over it — both land, and the append leaves no orphan files
+    Maintenance.beforeRowLevelInstall = () => {
+      Maintenance.beforeRowLevelInstall = () => ()
+      Maintenance.upsert(spark, dir,
+        Seq((100L, 6, "seam")).toDF("k", "grp", "payload"))
+    }
+    try PDataset.fromDataFrame(keyedDF(20000, 5), Seq("k"))
+      .writeParquet(dir, append = true)
+    finally Maintenance.beforeRowLevelInstall = () => ()
+    val after5 = PDataset.scanParquet(spark, dir)
+    assert(after5.toDF.count() == 210)
+    assert(after5.toDF.filter(col("k") === 100L).head().getString(2)
+      == "seam", "the concurrent upsert must survive the append")
+    assert(after5.toDF.filter(col("k") >= 20000L).count() == 5)
+    checkBoundsAndSizes(after5)
+    assertNoOrphans(dir)
+
+    // 6. a schema change lands during a PDataset append: the append
+    //    aborts loudly, removes its files and changes no row
+    val rows6 = after5.toDF.collect()
+    Maintenance.beforeRowLevelInstall = () => {
+      Maintenance.beforeRowLevelInstall = () => ()
+      Maintenance.addColumns(spark, dir, StructField("extra", LongType))
+    }
+    val e6 = try intercept[java.util.ConcurrentModificationException] {
+      PDataset.fromDataFrame(keyedDF(30000, 5), Seq("k"))
+        .writeParquet(dir, append = true)
+    } finally Maintenance.beforeRowLevelInstall = () => ()
+    assert(e6.getMessage.contains("schema"), e6.getMessage)
+    assertNoOrphans(dir)
+    assertSameRows(
+      PDataset.scanParquet(spark, dir).toDF.select("k", "grp", "payload"),
+      spark.createDataFrame(java.util.Arrays.asList(rows6: _*),
+        after5.toDF.schema))
   }
 
   test("a concurrent DV DELETE on an affected file aborts the rewrite " +

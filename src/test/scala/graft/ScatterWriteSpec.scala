@@ -3,6 +3,7 @@ package graft
 import java.util.concurrent.atomic.AtomicInteger
 
 import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
+import org.apache.spark.sql.functions.{col, sha2}
 import org.scalatest.funsuite.AnyFunSuite
 
 import graft.core.PDataset
@@ -50,16 +51,12 @@ class ScatterWriteSpec extends AnyFunSuite {
     assert(stored.npartitions >= 12)
 
     val target = tempDir("scatter-out") + "/ds"
-    val old = PDataset.scatterWriteThreshold
-    PDataset.scatterWriteThreshold = 4
-    try {
-      val (out, jobs) = countJobs(stored.writeParquet(target))
-      // One scatter job + the schema sidecar write; stats reuse known
-      // metadata. Without batching this is >= 13 per-partition jobs.
-      assert(jobs <= 6, s"expected O(1) jobs for the batched write, saw $jobs")
-      checkBoundsAndSizes(out)
-      assertSameRows(out.toDF, stored.toDF)
-    } finally PDataset.scatterWriteThreshold = old
+    val (out, jobs) = countJobs(stored.writeParquet(target))
+    // One scatter job + the schema sidecar write; stats reuse known
+    // metadata. Without batching this is >= 13 per-partition jobs.
+    assert(jobs <= 6, s"expected O(1) jobs for the batched write, saw $jobs")
+    checkBoundsAndSizes(out)
+    assertSameRows(out.toDF, stored.toDF)
   }
 
   test("append through the scatter path extends the dataset") {
@@ -69,15 +66,11 @@ class ScatterWriteSpec extends AnyFunSuite {
     val stored = base.repartition(8)
       .writeParquet(tempDir("scatter-app-stored") + "/ds")
     val target = tempDir("scatter-app-out") + "/ds"
-    val old = PDataset.scatterWriteThreshold
-    PDataset.scatterWriteThreshold = 4
-    try {
-      stored.writeParquet(target)
-      val appended = stored.writeParquet(target, append = true)
-      assert(appended.toDF.count() == 196)
-      assert(appended.npartitions == 26)
-      checkBoundsAndSizes(appended)
-    } finally PDataset.scatterWriteThreshold = old
+    stored.writeParquet(target)
+    val appended = stored.writeParquet(target, append = true)
+    assert(appended.toDF.count() == 196)
+    assert(appended.npartitions == 26)
+    checkBoundsAndSizes(appended)
   }
 
   test("collated and sliced unwritten repartitions write via one scatter job") {
@@ -159,22 +152,76 @@ class ScatterWriteSpec extends AnyFunSuite {
     assert(secondA == (-2L until 96L), s"appended row order: $secondA")
   }
 
-  test("sliced or repeated file partitions fall back to per-partition writes") {
+  test("sliced, repeated, multi-row-group and lazy partitions write " +
+      "via one scatter job, keeping each partition's rows in order") {
     val src = tempDir("scatter-fallback-src")
     writeDatetimeSample(spark, src)
     val base = PDataset.scanParquet(spark, src).reindex(datetimeIndexColumns)
     val stored = base.repartition(8)
       .writeParquet(tempDir("scatter-fallback-stored") + "/ds")
     // A slice leaves residual filters on boundary partitions — the
-    // one-relation scatter cannot express per-partition filters, so
-    // the write must still be correct via the fallback.
+    // one-relation file tagger cannot express per-partition filters,
+    // so these partitions are unioned and tagged one by one.
     val sliced = stored.slice(lb = datetimeLowerBounds(1))
-    val old = PDataset.scatterWriteThreshold
-    PDataset.scatterWriteThreshold = 2
+    val (out, jobs) =
+      countJobs(sliced.writeParquet(tempDir("scatter-fallback-out") + "/ds"))
+    assert(jobs <= 7, s"expected O(1) jobs for the sliced write, saw $jobs")
+    assert(out.toDF.count() == sliced.toDF.count())
+    checkBoundsAndSizes(out)
+    // a repeated file would collapse two partitions onto one ordinal
+    val (rOut, rJobs) = countJobs(PDataset.concat(Seq(stored, stored))
+      .writeParquet(tempDir("scatter-repeated-out") + "/ds"))
+    assert(rJobs <= 6, s"expected O(1) jobs for the repeated write, saw $rJobs")
+    assert(rOut.npartitions == 2 * stored.npartitions)
+    assertSameRows(rOut.toDF, stored.toDF.union(stored.toDF))
+
+    def assertSamePartitions(src: PDataset, out: PDataset): Unit = {
+      assert(out.npartitions == src.npartitions)
+      (0 until src.npartitions).foreach { i =>
+        assert(out(i).collect() sameElements src(i).collect(),
+          s"partition $i lost its row order")
+      }
+    }
+    def payloadDF(lo: Long, hi: Long, slices: Int) =
+      spark.range(lo, hi, 1, slices).select(col("id").as("k"),
+        sha2(col("id").cast("string"), 512).as("payload"))
+
+    // files holding several row groups, each split over several scan
+    // tasks: the file tagger restores order from the row's position
+    val conf = spark.conf
+    val oldSplit = conf.get("spark.sql.files.maxPartitionBytes")
+    conf.set("parquet.block.size", "1024")
+    conf.set("parquet.page.size.row.check.min", "4")
     try {
-      val out = sliced.writeParquet(tempDir("scatter-fallback-out") + "/ds")
-      assert(out.toDF.count() == sliced.toDF.count())
-      checkBoundsAndSizes(out)
-    } finally PDataset.scatterWriteThreshold = old
+      val multi = PDataset.concat((0 until 200 by 20).map(lo =>
+        PDataset.fromDataFrame(payloadDF(lo, lo + 20L, 1), Seq("k"))))
+        .writeParquet(tempDir("scatter-rowgroups-src") + "/ds")
+      conf.set("spark.sql.files.maxPartitionBytes", "512")
+      val footer = org.apache.parquet.hadoop.ParquetFileReader.open(
+        org.apache.parquet.hadoop.util.HadoopInputFile.fromPath(
+          new org.apache.hadoop.fs.Path(multi.toDF.inputFiles.min),
+          spark.sessionState.newHadoopConf()))
+      try assert(footer.getRowGroups.size > 1,
+        "fixture files must hold several row groups")
+      finally footer.close()
+      assert(multi(0).rdd.getNumPartitions > 1,
+        "fixture files must span several splits")
+      val (mOut, mJobs) = countJobs(
+        multi.writeParquet(tempDir("scatter-rowgroups-out") + "/ds"))
+      assert(mJobs <= 6, s"expected O(1) jobs for the file rewrite, saw $mJobs")
+      assertSamePartitions(multi, mOut)
+    } finally {
+      conf.unset("parquet.block.size")
+      conf.unset("parquet.page.size.row.check.min")
+      conf.set("spark.sql.files.maxPartitionBytes", oldSplit)
+    }
+
+    // lazy partitions of several scan tasks each
+    val lazyParts = PDataset.concat((0 until 160 by 20).map(lo =>
+      PDataset.fromDataFrame(payloadDF(lo, lo + 20L, 3))))
+    val (lOut, lJobs) = countJobs(
+      lazyParts.writeParquet(tempDir("scatter-lazy-out") + "/ds"))
+    assert(lJobs <= 6, s"expected O(1) jobs for the lazy write, saw $lJobs")
+    assertSamePartitions(lazyParts, lOut)
   }
 }

@@ -812,6 +812,13 @@ class StreamingSpec extends AnyFunSuite {
     Maintenance.compact(spark, t1, targetRows = 1000)
     stamped(8)
     assert(n() == 115, "the txn ledger must survive compaction")
+    // ... and a PDataset append, which commits through the same install
+    graft.core.PDataset.fromDataFrame(rows.filter(col("k") < 5)
+      .withColumn("k", col("k") + 3000L), Seq("k"))
+      .writeParquet(t1, append = true)
+    assert(n() == 120)
+    stamped(8)
+    assert(n() == 120, "the txn ledger must survive a PDataset append")
   }
 
   test("native writeStream format(\"graft\") sink: exactly-once " +
