@@ -152,8 +152,19 @@ class ScatterWriteSpec extends AnyFunSuite {
     assert(secondA == (-2L until 96L), s"appended row order: $secondA")
   }
 
-  test("sliced, repeated, multi-row-group and lazy partitions write " +
-      "via one scatter job, keeping each partition's rows in order") {
+  private def assertSamePartitions(src: PDataset, out: PDataset): Unit = {
+    assert(out.npartitions == src.npartitions)
+    (0 until src.npartitions).foreach { i =>
+      assert(out(i).collect() sameElements src(i).collect(),
+        s"partition $i lost its row order")
+    }
+  }
+
+  private def payloadDF(lo: Long, hi: Long, slices: Int) =
+    spark.range(lo, hi, 1, slices).select(col("id").as("k"),
+      sha2(col("id").cast("string"), 512).as("payload"))
+
+  test("sliced or repeated file partitions write via one scatter job") {
     val src = tempDir("scatter-fallback-src")
     writeDatetimeSample(spark, src)
     val base = PDataset.scanParquet(spark, src).reindex(datetimeIndexColumns)
@@ -174,18 +185,10 @@ class ScatterWriteSpec extends AnyFunSuite {
     assert(rJobs <= 6, s"expected O(1) jobs for the repeated write, saw $rJobs")
     assert(rOut.npartitions == 2 * stored.npartitions)
     assertSameRows(rOut.toDF, stored.toDF.union(stored.toDF))
+  }
 
-    def assertSamePartitions(src: PDataset, out: PDataset): Unit = {
-      assert(out.npartitions == src.npartitions)
-      (0 until src.npartitions).foreach { i =>
-        assert(out(i).collect() sameElements src(i).collect(),
-          s"partition $i lost its row order")
-      }
-    }
-    def payloadDF(lo: Long, hi: Long, slices: Int) =
-      spark.range(lo, hi, 1, slices).select(col("id").as("k"),
-        sha2(col("id").cast("string"), 512).as("payload"))
-
+  test("multi-row-group and lazy partitions write via one scatter job " +
+      "in row order") {
     // files holding several row groups, each split over several scan
     // tasks: the file tagger restores order from the row's position
     val conf = spark.conf
