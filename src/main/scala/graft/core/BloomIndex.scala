@@ -250,8 +250,7 @@ object BloomIndex {
 
   /** Raw sidecar entries keyed (file base name, column), with each
     * entry's build fpp; empty when no sidecar exists. Spark's listing
-    * hides `_`-prefixed files, so stage a visible local copy (same
-    * discipline as the schema sidecar). */
+    * hides `_`-prefixed files, so stage a visible local copy. */
   private def readEntries(
       spark: SparkSession,
       fs: org.apache.hadoop.fs.FileSystem,

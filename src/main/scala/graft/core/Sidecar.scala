@@ -1,8 +1,10 @@
 package graft.core
 
 import org.apache.hadoop.fs.{FileSystem, Path}
+import org.apache.parquet.hadoop.{Footer, ParquetFileReader}
+import org.apache.parquet.hadoop.util.HadoopInputFile
 
-import org.apache.spark.sql.{DataFrame, Row, SparkSession}
+import org.apache.spark.sql.{DataFrame, GraftBridge, Row, SparkSession}
 import org.apache.spark.sql.types._
 
 import Lex.Bound
@@ -251,23 +253,29 @@ object Sidecar {
         .map { case (k, v) => k -> v.toString }).getOrElse(Map.empty)
   }
 
-  /** Spark's file listing hides `_`-prefixed files (Hadoop metadata
-    * convention), so the `_padawan_schema` sidecar can't be read in
-    * place — stage a visibly-named LOCAL copy (streamed through the
-    * source FileSystem, so remote sidecars work too) and read that. */
-  private def readSchemaFile(
+  /** Decode the `_padawan_schema` footer on the driver, no Spark job,
+    * to what `spark.read.parquet(file).schema` gives (Spark's listing
+    * hides `_`-prefixed files, so it could only read a copy). The
+    * read is retried if the file is replaced mid-read. */
+  private[graft] def readSchemaFile(
       spark: SparkSession, fs: FileSystem, file: Path): StructType = {
-    val tmp = java.nio.file.Files.createTempDirectory("graft-schema-")
-    try {
-      val copy = tmp.resolve("schema.parquet")
-      GraftFs.retryReplaced {
-        java.nio.file.Files.deleteIfExists(copy)
-        val in = fs.open(file)
-        try java.nio.file.Files.copy(in, copy)
-        finally in.close()
+    val footer = GraftFs.retryReplaced {
+      val st = fs.getFileStatus(file)
+      try {
+        val reader = ParquetFileReader.open(
+          HadoopInputFile.fromStatus(st, fs.getConf))
+        try reader.getFooter finally reader.close()
+      } catch {
+        // replaced between the stat and the open: the new file was
+        // read at the old length, so retry as for a vanished file
+        case _: Exception if {
+          val now = fs.getFileStatus(file)
+          now.getLen != st.getLen ||
+            now.getModificationTime != st.getModificationTime
+        } => throw new java.io.FileNotFoundException(s"$file replaced")
       }
-      spark.read.parquet(copy.toString).schema
-    } finally deleteRecursively(tmp)
+    }
+    GraftBridge.footerSchema(spark, new Footer(file, footer))
   }
 
   /** Coerce a JSON-decoded bound value to the JVM type matching the
@@ -342,9 +350,13 @@ object Sidecar {
       if (fs.exists(tmp) && GraftFs.isFile(fs, metadataPath(dir)))
         fs.delete(tmp, false)
     }
-    val empty = spark.createDataFrame(
-      java.util.Collections.emptyList[Row](), schema)
-    writeSingleParquet(empty, new Path(dir, SchemaFile).toString)
+    // Rewrite the schema sidecar only when it is absent or decodes to
+    // another schema: an unchanged-schema commit swaps the JSON alone.
+    val schemaPath = new Path(dir, SchemaFile)
+    if (!GraftFs.isFile(fs, schemaPath) ||
+        readSchemaFile(spark, fs, schemaPath) != GraftBridge.asNullable(schema))
+      writeSingleParquet(spark.createDataFrame(
+        java.util.Collections.emptyList[Row](), schema), schemaPath.toString)
   }
 
   /** Write a DataFrame as ONE parquet file at exactly `target`.
@@ -352,9 +364,10 @@ object Sidecar {
     * Spark's writer emits a directory; for sidecar-format compatibility we
     * stage into a same-FS temp dir (single task via coalesce(1)) and move
     * the lone part file into place — a same-filesystem `rename`, never a
-    * copy. Used for the schema sidecar, Bloom sidecars and the rare
-    * merge of a scatter partition's retried task outputs; data files
-    * are written by one partitionBy job instead (see [[ScatterWrite]]).
+    * copy. Used for the schema sidecar when [[write]] finds it absent or
+    * stale (not on every commit), Bloom sidecars and the rare merge of
+    * a scatter partition's retried task outputs; data files are written
+    * by one partitionBy job instead (see [[ScatterWrite]]).
     */
   def writeSingleParquet(
       df: DataFrame,
@@ -379,7 +392,7 @@ object Sidecar {
   }
 
   /** Local-only recursive delete for driver-side temp scaffolding (test
-    * fixtures, the staged schema copy). Dataset paths use
+    * fixtures, the Bloom sidecar's staged copy). Dataset paths use
     * [[GraftFs.deleteRecursive]]. */
   def deleteRecursively(p: java.nio.file.Path): Unit = {
     if (java.nio.file.Files.isDirectory(p))

@@ -6,8 +6,6 @@ import java.time.format.DateTimeFormatter
 
 import com.fasterxml.jackson.databind.{JsonNode, ObjectMapper}
 
-import scala.jdk.CollectionConverters._
-
 /** Typed JSON codec for the sidecar metadata format.
   *
   * Plain JSON extended with single-key typed objects so temporal bound

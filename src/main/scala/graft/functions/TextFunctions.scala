@@ -44,18 +44,6 @@ object TextFunctions {
   def punctRatio(c: Column): Column =
     punctCount(c).cast("double") / greatest(length(c), lit(1)).cast("double")
 
-  /** Fraction of tokens that are (English) stopwords. */
-  def stopwordRatio(c: Column, stopwords: Seq[String] = defaultStopwords): Column = {
-    val toks = tokens(lower(c))
-    val sw = array(stopwords.map(lit): _*)
-    size(array_intersect(toks, sw)).cast("double") /
-      greatest(size(toks), lit(1)).cast("double")
-  }
-
-  val defaultStopwords: Seq[String] = Seq(
-    "the", "a", "an", "and", "or", "of", "to", "in", "is", "it",
-    "that", "for", "on", "with", "as", "at", "by", "from")
-
   /** Gopher-style keep/drop with a FIRST-MATCH reason — the composite
     * filter a pretraining pipeline applies before dedup. Every rule is
     * RE2/ANSI-derivable, so any engine rederives the exact decision:

@@ -39,15 +39,6 @@ object Dedup {
       .agg(min(col(idCol)).as(idCol), count(lit(1)).as("copies"))
   }
 
-  /** Deterministic MinHash permutation parameters, sized so that
-    * a*h32 + b stays well under 2^63 (ANSI-mode safe: no overflow). */
-  private def permParams(numPerms: Int, seed: Long): (Array[Long], Array[Long]) = {
-    val rnd = new java.util.Random(seed)
-    val as = Array.fill(numPerms)((rnd.nextInt(1 << 30) | 1).toLong)
-    val bs = Array.fill(numPerms)(rnd.nextInt(Int.MaxValue).toLong)
-    (as, bs)
-  }
-
   /** 32-bit element hashes for a shingle array (low bits of xxhash64,
     * seed 42 — bit-identical to
     * `transform(sh, s => xxhash64(s) & 0xFFFFFFFF)`, but hashed in one
@@ -250,9 +241,9 @@ object Dedup {
     appendBandsToMinhashIndex(spark, bt, dir, txn, autoReclusterOverlap)
   }
 
-  /** Append PRECOMPUTED band rows (the [[dedupBatchWithBands]] slice —
-    * schema (id, band, bucket)) to the index: the write half of
-    * [[appendToMinhashIndex]] without the second signature pass. */
+  /** Append PRECOMPUTED band rows (schema (id, band, bucket)) to the
+    * index: the write half of [[appendToMinhashIndex]] without its
+    * signature pass. */
   private[graft] def appendBandsToMinhashIndex(
       spark: SparkSession,
       bt: DataFrame,
@@ -331,9 +322,10 @@ object Dedup {
   }
 
   /** [[incrementalPairsTagged]] over a PRECOMPUTED (possibly cached)
-    * band table of the batch — the reuse point that lets the
-    * streaming sink sign each batch ONCE for both the dedup decision
-    * and the index append. */
+    * band table of the batch. The streaming sink does not reuse it:
+    * it signs each batch twice, once in [[dedupBatch]] for the dedup
+    * decision and once more over the survivors in
+    * [[appendToMinhashIndex]] for the index append. */
   private def incrementalPairsFromBands(
       spark: SparkSession,
       fresh: DataFrame,

@@ -79,11 +79,6 @@ object Layout {
     interleave(
       cols.zip(cuts).map { case (c, cu) => bucketOf(col(c), cu) }, bits)
 
-  /** The z-value column for `df` over `cols` (runs the one-pass
-    * quantile job on `df` to place the cut points). */
-  def zColumn(df: DataFrame, cols: Seq[String], bits: Int = 12): Column =
-    zColumnFor(cols, quantileCuts(df, cols, bits), bits)
-
   /** Write `df` z-order-clustered on `cols` into ~`targetFiles`
     * files, then collect per-file per-column min/max/null stats (one
     * narrow pass, #files result rows) into a `_zorder_meta.json`

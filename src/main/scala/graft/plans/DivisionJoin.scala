@@ -262,15 +262,6 @@ object DivisionJoinExec {
       matched || (bits != null && bits.get(i))
   }
 
-  /** Test seam for [[joinIterators]]. */
-  private[graft] def testJoin(
-      lIt: Iterator[InternalRow], rIt: Iterator[InternalRow],
-      joinType: JoinType, lTypes: Array[DataType], rTypes: Array[DataType],
-      lKeyOrds: Array[Int], rKeyOrds: Array[Int],
-      lRestOrds: Array[Int], rRestOrds: Array[Int]): Iterator[InternalRow] =
-    joinIterators(lIt, rIt, joinType, lTypes, rTypes,
-      lKeyOrds, rKeyOrds, lRestOrds, rRestOrds, emitPresence = false)
-
   /** Per-division hash join: build = right (copied into a hash table),
     * probe = streamed left. SQL equi-join null semantics: a null key
     * component never matches; outer-side rows with null keys still

@@ -5,8 +5,6 @@ import org.apache.spark.sql.catalyst.expressions.{Alias, Attribute, ExprId, Name
 import org.apache.spark.sql.catalyst.plans.logical.{Aggregate, Filter, LogicalPlan, Repartition, Union}
 import org.apache.spark.sql.catalyst.rules.Rule
 
-import graft.core.Lex
-
 /** Automatic SHUFFLE-FREE SQL aggregation on clustered keys.
   *
   * `SELECT k, agg(...) FROM graft.db.t GROUP BY k, ...` where `k` is

@@ -7,8 +7,6 @@ import org.apache.spark.sql.catalyst.plans.logical.{Filter, Join, JoinHint, Logi
 import org.apache.spark.sql.catalyst.rules.Rule
 import org.apache.spark.sql.execution.datasources.LogicalRelation
 
-import graft.core.Lex
-
 /** Automatic SHUFFLE-FREE SQL joins between co-clustered graft
   * tables.
   *

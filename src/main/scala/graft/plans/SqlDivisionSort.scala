@@ -5,8 +5,6 @@ import org.apache.spark.sql.catalyst.expressions.{Ascending, Attribute, Descendi
 import org.apache.spark.sql.catalyst.plans.logical.{Filter, LogicalPlan, Repartition, Sort, Union}
 import org.apache.spark.sql.catalyst.rules.Rule
 
-import graft.core.Lex
-
 /** Automatic SHUFFLE-FREE SQL global sorts on clustered keys.
   *
   * `SELECT ... FROM graft.db.t ORDER BY k, ...` where the leading

@@ -5,8 +5,6 @@ import org.apache.spark.sql.catalyst.expressions.{Alias, Attribute, ExprId, Name
 import org.apache.spark.sql.catalyst.plans.logical.{Filter, LogicalPlan, Repartition, Union, Window}
 import org.apache.spark.sql.catalyst.rules.Rule
 
-import graft.core.Lex
-
 /** Automatic SHUFFLE-FREE SQL window functions on clustered keys.
   *
   * `... OVER (PARTITION BY k ORDER BY ...)` where `k` is a leading

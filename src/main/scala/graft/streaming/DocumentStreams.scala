@@ -1,6 +1,6 @@
 package graft.streaming
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.{DataFrame, GraftBridge, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types._
 
@@ -154,9 +154,12 @@ object DocumentStreams {
         val spanCut = spanGate.fold(gated)(spanDir =>
           graft.operators.Dedup.dedupSpansBatch(spark, gated, idCol,
             textCol, spanDir, appendToIndex = false))
+        // Computed once with the lineage cut: the corpus append
+        // recaches every plan reading corpusDir, so a persisted frame
+        // would be dropped and re-run in full for the index append.
         val survivors = graft.operators.Dedup.dedupBatch(spark,
           spanCut, idCol, textCol, corpus, indexDir, threshold,
-          shingler, shinglerTag).persist()
+          shingler, shinglerTag).localCheckpoint()
         try {
           if (!survivors.isEmpty) {
             survivors.write.format("graft").mode("append")
@@ -176,7 +179,7 @@ object DocumentStreams {
               txn = Some((app, batchId)),
               autoReclusterOverlap = autoReclusterOverlap)
           }
-        } finally { survivors.unpersist(); () }
+        } finally GraftBridge.releaseLocalCheckpoint(survivors)
       }
       .start()
   }

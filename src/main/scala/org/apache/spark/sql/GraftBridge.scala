@@ -1,6 +1,7 @@
 package org.apache.spark.sql
 
 import org.apache.spark.sql.catalyst.expressions.Expression
+import org.apache.spark.sql.types.StructType
 
 /** Bridge into Spark 4's `private[sql]` Column<->Expression converters,
   * the supported pattern for libraries that add custom Catalyst
@@ -127,6 +128,30 @@ object GraftBridge {
   def sameTypeIgnoreNullability(
       a: org.apache.spark.sql.types.DataType,
       b: org.apache.spark.sql.types.DataType): Boolean = a.sameType(b)
+
+  /** The schema `spark.read.parquet(file).schema` gives for a file
+    * with this footer, decoded on the driver with no job: the decode
+    * Spark's schema inference runs per file (the footer's Spark row
+    * metadata, else the parquet schema under the session's conf),
+    * made nullable as `DataSource` makes a file relation's schema. */
+  def footerSchema(
+      spark: SparkSession, footer: org.apache.parquet.hadoop.Footer): StructType = {
+    import execution.datasources.parquet._
+    val conf = spark.asInstanceOf[classic.SparkSession].sessionState.conf
+    asNullable(ParquetFileFormat.readSchemaFromFooter(
+      footer, new ParquetToSparkSchemaConverter(conf)))
+  }
+
+  /** Drop the blocks behind a `localCheckpoint()`ed frame (the RDDs
+    * of its `LogicalRDD` leaves) now, not whenever the ContextCleaner
+    * collects them; the frame must not be read afterwards. */
+  def releaseLocalCheckpoint(df: DataFrame): Unit =
+    planOf(df).collect { case r: execution.LogicalRDD => r.rdd }
+      .foreach(_.unpersist(blocking = false))
+
+  /** Every field nullable at every nesting level (the `private[spark]`
+    * `StructType.asNullable`), the form a file relation reads back. */
+  def asNullable(s: StructType): StructType = s.asNullable
 
   /** Register a function builder on an EXISTING session (the
     * `withExtensions` path only applies at session construction). */

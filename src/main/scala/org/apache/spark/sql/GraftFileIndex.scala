@@ -508,7 +508,8 @@ object GraftRelations {
   /** The [[HadoopFsRelation]] for a sidecar-carrying dataset
     * directory — the relation behind `spark.read.format("graft")`:
     * file listing, schema and lex-tuple bounds all from the sidecar
-    * (no directory listing, no footer reads), pruning inside
+    * (no directory listing, no Spark job: one driver-side footer read
+    * of the schema sidecar), pruning inside
     * Catalyst. When a `_graft_bloom` sidecar exists (see
     * [[graft.core.BloomIndex]]), pushed `=`/`IN` predicates on its
     * columns additionally prune through the per-file Bloom filters. */

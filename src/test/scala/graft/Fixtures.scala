@@ -105,6 +105,26 @@ object Fixtures {
   def tempDir(prefix: String): String =
     Files.createTempDirectory(prefix).toString
 
+  /** Run `body` and count the Spark jobs started meanwhile (on any
+    * thread of the context). */
+  def countJobs[A](spark: SparkSession)(body: => A): (A, Int) = {
+    val n = new java.util.concurrent.atomic.AtomicInteger
+    val l = new org.apache.spark.scheduler.SparkListener {
+      override def onJobStart(
+          js: org.apache.spark.scheduler.SparkListenerJobStart): Unit =
+        n.incrementAndGet()
+    }
+    spark.sparkContext.addSparkListener(l)
+    val out =
+      try body
+      finally {
+        // Listener events post asynchronously; drain before reading.
+        org.apache.spark.GraftTestBridge.drainListeners(spark.sparkContext)
+        spark.sparkContext.removeSparkListener(l)
+      }
+    (out, n.get)
+  }
+
   /** Invariant checker (tests/utils.py:12-24): per partition, sorted by
     * the index columns (null-first), the first/last index tuples equal
     * the reported bounds and the row count equals the reported size. */

@@ -1,8 +1,5 @@
 package graft
 
-import java.util.concurrent.atomic.AtomicInteger
-
-import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
 import org.apache.spark.sql.functions.{col, sha2}
 import org.scalatest.funsuite.AnyFunSuite
 
@@ -16,22 +13,8 @@ class ScatterWriteSpec extends AnyFunSuite {
 
   private lazy val spark = TestSpark.spark
 
-  private def countJobs[A](body: => A): (A, Int) = {
-    val n = new AtomicInteger
-    val l = new SparkListener {
-      override def onJobStart(js: SparkListenerJobStart): Unit =
-        n.incrementAndGet()
-    }
-    spark.sparkContext.addSparkListener(l)
-    val out =
-      try body
-      finally {
-        // Listener events post asynchronously; drain before reading.
-        org.apache.spark.GraftTestBridge.drainListeners(spark.sparkContext)
-        spark.sparkContext.removeSparkListener(l)
-      }
-    (out, n.get)
-  }
+  private def countJobs[A](body: => A): (A, Int) =
+    Fixtures.countJobs(spark)(body)
 
   test("job-count pins run under AQE (the real-cluster config)") {
     // The O(1)-jobs assertions below count REAL jobs at execution

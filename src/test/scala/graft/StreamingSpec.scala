@@ -209,8 +209,15 @@ class StreamingSpec extends AnyFunSuite {
       "doc_id", "text", root + "/corpus", root + "/idx", ck,
       appId = Some("ingest-spec"))
     b1.coalesce(1).write.mode("append").parquet(srcDir)
-    val q1 = startSink()
-    try q1.processAllAvailable() finally q1.stop()
+    val (_, batch1Jobs) = Fixtures.countJobs(spark) {
+      val q1 = startSink()
+      try q1.processAllAvailable() finally q1.stop()
+    }
+    // One micro-batch runs the dedup plan once: the index append
+    // reuses the survivors the corpus append wrote (26 jobs; re-running
+    // the plan after the corpus append's recache takes 41).
+    assert(batch1Jobs <= 30,
+      s"one dedupSink micro-batch started $batch1Jobs jobs")
     b2.coalesce(1).write.mode("append").parquet(srcDir)
     val q2 = startSink()
     try q2.processAllAvailable() finally q2.stop()

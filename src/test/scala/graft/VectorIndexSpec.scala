@@ -1,8 +1,5 @@
 package graft
 
-import java.util.concurrent.atomic.AtomicInteger
-
-import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
 import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
 
@@ -27,21 +24,8 @@ class VectorIndexSpec extends AnyFunSuite {
     dir
   }
 
-  private def countJobs[A](body: => A): (A, Int) = {
-    val n = new AtomicInteger
-    val l = new SparkListener {
-      override def onJobStart(js: SparkListenerJobStart): Unit =
-        n.incrementAndGet()
-    }
-    spark.sparkContext.addSparkListener(l)
-    val out =
-      try body
-      finally {
-        org.apache.spark.GraftTestBridge.drainListeners(spark.sparkContext)
-        spark.sparkContext.removeSparkListener(l)
-      }
-    (out, n.get)
-  }
+  private def countJobs[A](body: => A): (A, Int) =
+    Fixtures.countJobs(spark)(body)
 
   test("indexed topK matches the one-shot ivfTopK bit-for-bit") {
     val got = VectorIndex.topK(spark, queries, ivfDir,
