@@ -3,6 +3,8 @@ package graft.core
 import java.io.{ByteArrayInputStream, ByteArrayOutputStream}
 
 import org.apache.hadoop.fs.{Path => HPath}
+import org.apache.parquet.example.data.simple.convert.GroupRecordConverter
+import org.apache.parquet.io.ColumnIOFactory
 
 import org.apache.spark.sql.{Row, SparkSession}
 import org.apache.spark.sql.functions._
@@ -77,21 +79,19 @@ object BloomIndex {
 
   /** Extend an existing Bloom sidecar to files that have no entry yet
     * (e.g. appended since the last build): builds filters for ONLY
-    * those files and merges them into the sidecar. `cols` defaults to
-    * the columns already indexed and `fpp` to the sidecar's stored
-    * rate (so maintenance refreshes keep the original precision).
+    * those files and merges them into the sidecar, for the columns
+    * already indexed. `fpp` defaults to the sidecar's stored rate (so
+    * maintenance refreshes keep the original precision).
     * Entries for files no longer on disk are dropped — the sidecar
     * tracks the live dataset (current + retained generations), it
     * doesn't grow with history. */
   def update(
       spark: SparkSession,
       dir: String,
-      cols: Seq[String] = Seq.empty,
       fpp: Option[Double] = None): Unit = {
     val (fs, dirPath) = GraftFs.resolve(spark, dir)
-    val existing = readEntries(spark, fs, dirPath)
-    val theCols =
-      if (cols.nonEmpty) cols else existing.keys.map(_._2).toSeq.distinct
+    val existing = readEntries(fs, dirPath)
+    val theCols = existing.keys.map(_._2).toSeq.distinct
     val theFpp = fpp.orElse(existing.values.headOption.map(_._2))
       .getOrElse(0.01)
     val m = validate(spark, dir, theCols, theFpp)
@@ -207,7 +207,7 @@ object BloomIndex {
       renames: Map[String, String]): Unit = {
     val (fs, dirPath) = GraftFs.resolve(spark, dir)
     if (!GraftFs.isFile(fs, new HPath(dirPath, BloomFile))) return
-    val existing = readEntries(spark, fs, dirPath)
+    val existing = readEntries(fs, dirPath)
     val rekeyed = existing.map { case ((f, c), v) =>
       (f, renames.getOrElse(c, c)) -> v }
     if (rekeyed.keySet != existing.keySet)
@@ -218,7 +218,7 @@ object BloomIndex {
       spark: SparkSession, dir: String, names: Set[String]): Unit = {
     val (fs, dirPath) = GraftFs.resolve(spark, dir)
     if (!GraftFs.isFile(fs, new HPath(dirPath, BloomFile))) return
-    val existing = readEntries(spark, fs, dirPath)
+    val existing = readEntries(fs, dirPath)
     val kept = existing.filter { case ((_, c), _) => !names.contains(c) }
     if (kept.size == existing.size) return
     if (kept.isEmpty) {
@@ -249,26 +249,30 @@ object BloomIndex {
   }
 
   /** Raw sidecar entries keyed (file base name, column), with each
-    * entry's build fpp; empty when no sidecar exists. Spark's listing
-    * hides `_`-prefixed files, so stage a visible local copy. */
-  private def readEntries(
-      spark: SparkSession,
+    * entry's build fpp; empty when no sidecar exists. Decoded on the
+    * driver (a driver-sized file), no Spark job. */
+  private[graft] def readEntries(
       fs: org.apache.hadoop.fs.FileSystem,
       dirPath: HPath): Map[(String, String), (Array[Byte], Double)] = {
     val file = new HPath(dirPath, BloomFile)
     if (!GraftFs.isFile(fs, file)) return Map.empty
-    val tmp = java.nio.file.Files.createTempDirectory("graft-bloom-")
-    try {
-      val copy = tmp.resolve("bloom.parquet")
-      val in = fs.open(file)
-      try java.nio.file.Files.copy(in, copy)
-      finally in.close()
-      spark.read.parquet(copy.toString)
-        .collect()
-        .map(r => (r.getString(0), r.getString(1)) ->
-          ((r.getAs[Array[Byte]](2), r.getDouble(3))))
-        .toMap
-    } finally Sidecar.deleteRecursively(tmp)
+    Sidecar.withParquetReader(fs, file) { reader =>
+      val schema = reader.getFooter.getFileMetaData.getSchema
+      val io = new ColumnIOFactory().getColumnIO(schema)
+      val out = Map.newBuilder[(String, String), (Array[Byte], Double)]
+      var pages = reader.readNextRowGroup()
+      while (pages != null) {
+        val records =
+          io.getRecordReader(pages, new GroupRecordConverter(schema))
+        (0L until pages.getRowCount).foreach { _ =>
+          val g = records.read()
+          out += (g.getString("file", 0), g.getString("col", 0)) ->
+            ((g.getBinary("bloom", 0).getBytes, g.getDouble("fpp", 0)))
+        }
+        pages = reader.readNextRowGroup()
+      }
+      out.result()
+    }
   }
 
   // ---- read side ----
@@ -307,7 +311,7 @@ object BloomIndex {
     val key = (dirPath.toString, status.getModificationTime, status.getLen)
     if (cache.size > 8) cache.clear()
     val entries = cache.computeIfAbsent(key, _ =>
-      readEntries(spark, fs, dirPath).map { case (k, (bytes, _)) =>
+      readEntries(fs, dirPath).map { case (k, (bytes, _)) =>
         k -> deserialize(bytes)
       })
     val names = files.map(f => new HPath(f).getName).toIndexedSeq

@@ -13,6 +13,7 @@ import scala.collection.mutable.ArrayBuffer
   * shuffle a tagged frame once,
   * let the parquet sink write every partition in parallel, then move
   * each part's lone file into place — same-FS renames, never a copy.
+  * The move ([[place]]) also serves the `graft` sink's append.
   */
 private[graft] object ScatterWrite {
 
@@ -69,24 +70,37 @@ private[graft] object ScatterWrite {
           parent != null && parent.getName.startsWith("__part=")
       }
       .groupBy(_.getPath.getParent.getName.stripPrefix("__part=").toInt)
+    place(spark, fs, byPart.toVector.sortBy(_._1).map { case (i, sts) =>
+      i -> sts.map(_.getPath) }, dir, nameOf)
+  }
+
+  /** The placement half of [[partFiles]], shared with the `graft`
+    * sink's append: move each group of staged files into `dir` as
+    * `nameOf(slot)` and return the (slot, ACTUAL name) pairs. A name
+    * already taken (a concurrent committer planned from the same
+    * maxPartitionIndex) is never overwritten: the group lands under a
+    * disambiguated name instead, since the sidecar lists file names
+    * explicitly. A group is normally one file (a same-FS rename, never
+    * a copy); more than one can only come from speculative or retried
+    * tasks and is merged by reading it back (rare, small). */
+  def place(
+      spark: SparkSession,
+      fs: FileSystem,
+      groups: Seq[(Int, Seq[HPath])],
+      dir: HPath,
+      nameOf: Int => String): IndexedSeq[(Int, String)] = {
     val written = ArrayBuffer.empty[(Int, String)]
-    byPart.keys.toVector.sorted.foreach { i =>
-      val partFiles = byPart(i)
+    groups.foreach { case (i, files) =>
       val name =
         if (!fs.exists(new HPath(dir, nameOf(i)))) nameOf(i)
         else {
-          // name slot already taken by a concurrent committer: land
-          // under a disambiguated name (the sidecar lists file names
-          // explicitly, so any name is valid)
           val base = nameOf(i).stripSuffix(".parquet")
           s"$base-${java.util.UUID.randomUUID().toString.take(8)}.parquet"
         }
-      if (partFiles.length == 1)
-        GraftFs.moveOverwrite(fs, partFiles(0).getPath, new HPath(dir, name))
+      if (files.length == 1)
+        GraftFs.moveOverwrite(fs, files.head, new HPath(dir, name))
       else {
-        // >1 file can only happen under speculative/retried tasks;
-        // merge by reading back (rare, small).
-        val merged = spark.read.parquet(partFiles.map(_.getPath.toString): _*)
+        val merged = spark.read.parquet(files.map(_.toString): _*)
         Sidecar.writeSingleParquet(merged, new HPath(dir, name).toString)
       }
       written += ((i, name))

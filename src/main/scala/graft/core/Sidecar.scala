@@ -255,16 +255,23 @@ object Sidecar {
 
   /** Decode the `_padawan_schema` footer on the driver, no Spark job,
     * to what `spark.read.parquet(file).schema` gives (Spark's listing
-    * hides `_`-prefixed files, so it could only read a copy). The
-    * read is retried if the file is replaced mid-read. */
+    * hides `_`-prefixed files, so it could only read a copy). */
   private[graft] def readSchemaFile(
-      spark: SparkSession, fs: FileSystem, file: Path): StructType = {
-    val footer = GraftFs.retryReplaced {
+      spark: SparkSession, fs: FileSystem, file: Path): StructType =
+    GraftBridge.footerSchema(spark,
+      new Footer(file, withParquetReader(fs, file)(_.getFooter)))
+
+  /** Run `f` over a driver-side parquet-hadoop reader of `file` (a
+    * `_`-prefixed sidecar Spark's listing would hide), retried if the
+    * file is replaced mid-read. */
+  private[graft] def withParquetReader[A](fs: FileSystem, file: Path)(
+      f: ParquetFileReader => A): A =
+    GraftFs.retryReplaced {
       val st = fs.getFileStatus(file)
       try {
         val reader = ParquetFileReader.open(
           HadoopInputFile.fromStatus(st, fs.getConf))
-        try reader.getFooter finally reader.close()
+        try f(reader) finally reader.close()
       } catch {
         // replaced between the stat and the open: the new file was
         // read at the old length, so retry as for a vanished file
@@ -275,8 +282,6 @@ object Sidecar {
         } => throw new java.io.FileNotFoundException(s"$file replaced")
       }
     }
-    GraftBridge.footerSchema(spark, new Footer(file, footer))
-  }
 
   /** Coerce a JSON-decoded bound value to the JVM type matching the
     * column's Spark SQL type, so driver-side comparisons and `lit()`

@@ -324,10 +324,10 @@ object CopyInto {
       .option("copyIntoForce", force.toString)
       .save(dir)
 
-    // Rows loaded = the sidecar's row-count delta attributable to
-    // this commit (exact: the append registered only this batch's
-    // files; concurrent writers would have failed the conflict check
-    // or count separately on their own reload).
+    // Rows loaded = the sidecar's row-count delta across the append.
+    // The append registers only this batch's files, so this is exact
+    // unless another writer committed between the two loads; its
+    // rows are then counted here too.
     val after = Sidecar.load(spark, dir)
     val rows = after.sizes.sum - m.sizes.sum
     Report(listed.length, listed.length - fresh.length,

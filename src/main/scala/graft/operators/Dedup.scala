@@ -252,15 +252,7 @@ object Dedup {
       autoReclusterOverlap: Option[Int] = None): Unit = {
     autoReclusterOverlap.foreach(n => require(n >= 1,
       s"autoReclusterOverlap must be >= 1, got $n"))
-    txn match {
-      case None =>
-        graft.core.PDataset.fromDataFrame(bt, Seq("bucket"))
-          .writeParquet(dir, append = true)
-      case Some((app, v)) =>
-        bt.write.format("graft").mode("append")
-          .option("txnAppId", app).option("txnVersion", v.toString)
-          .save(dir)
-    }
+    sinkAppend(bt, dir, txn)
     autoReclusterOverlap.foreach { bound =>
       if (Maintenance.layoutHealth(spark, dir).maxOverlap > bound) {
         compactMinhashIndex(spark, dir)
@@ -1330,15 +1322,17 @@ object Dedup {
       txn: Option[(String, Long)] = None): Unit = {
     val k = spanIndexK(spark, dir)
     val t = spanShingleTable(newDocs, idCol, textCol, k)
-    txn match {
-      case None =>
-        graft.core.PDataset.fromDataFrame(t, Seq("h"))
-          .writeParquet(dir, append = true)
-      case Some((app, v)) =>
-        t.write.format("graft").mode("append")
-          .option("txnAppId", app).option("txnVersion", v.toString)
-          .save(dir)
-    }
+    sinkAppend(t, dir, txn)
+  }
+
+  /** One `graft` sink append onto an existing index (clustered on its
+    * own index columns), transactional when `txn` is given. */
+  private def sinkAppend(
+      df: DataFrame, dir: String, txn: Option[(String, Long)]): Unit = {
+    val w = df.write.format("graft").mode("append")
+    txn.foreach { case (app, v) =>
+      w.option("txnAppId", app).option("txnVersion", v.toString) }
+    w.save(dir)
   }
 
   /** ExactSubstr dedup of a NEW batch against an indexed corpus (plus

@@ -681,34 +681,42 @@ object Maintenance {
     * but before [[installCommit]] swaps the sidecar — the window a
     * concurrent commit can land in. Every file-replacing op reaches
     * it (compact and its scoped forms, deleteRange, recluster, the
-    * row-level rewrites, DV materialize), and so does a
-    * [[PDataset.writeParquet]] append. No-op in production. */
+    * row-level rewrites, DV materialize), and so do a
+    * [[PDataset.writeParquet]] append and a `graft` sink append.
+    * No-op in production. */
   private[graft] var beforeRowLevelInstall: () => Unit = () => ()
 
   /** A sidecar entry: file name, row count, lex lower / upper bound. */
   private[graft] type Entry = (String, Long, Bound, Bound)
 
-  /** The one commit every file-replacing op and every
-    * [[PDataset.writeParquet]] append installs through, with bounded
-    * OCC rebase-and-retry: the expensive part — the data write — is
-    * already durable, and a concurrent commit that touched neither
-    * this op's INPUT files nor its OUTPUT names (a sink append, a
-    * keyed op on disjoint files) is merged instead of aborting the
-    * op. `replacement` maps each consumed input file name to the
-    * entries that take its place (Nil = dropped, emptied, or merged
-    * into another input's entries); untouched files keep the LATEST
-    * generation's entries, so the concurrent commit's work survives,
-    * and the `added` entries (an append's new files) follow them. The
-    * sidecar extras (txn and COPY INTO ledgers, table options) carry
-    * over unchanged. `slots` is the number of partition-name slots the
-    * op allocated past `m0.maxPartitionIndex`. Aborts loudly when the
-    * concurrent commit rewrote an input file (the Delta
-    * concurrent-delete-read case), collided on an output name, changed
-    * the schema/index/rename mapping this rewrite was planned against,
-    * or marked rows of a replaced file with a deletion vector not in
-    * `dvSnapshot`. After the swap, deletes the replaced files no
-    * archived generation references (unless `retain`) and extends the
-    * Bloom / column-stats sidecars to the new files. */
+  /** The one commit every file-replacing op, every
+    * [[PDataset.writeParquet]] append and every `graft` sink append
+    * (batch writes, INSERT INTO, COPY INTO, the streaming sink)
+    * installs through, with bounded OCC rebase-and-retry: the
+    * expensive part — the data write — is already durable, and a
+    * concurrent commit that touched neither this op's INPUT files nor
+    * its OUTPUT names (a sink append, a keyed op on disjoint files) is
+    * merged instead of aborting the op. `replacement` maps each
+    * consumed input file name to the entries that take its place
+    * (Nil = dropped, emptied, or merged into another input's
+    * entries); untouched files keep the LATEST generation's entries,
+    * so the concurrent commit's work survives, and the `added` entries
+    * (an append's new files) follow them. The sidecar extras (txn and
+    * COPY INTO ledgers, table options) are `extrasOver` the generation
+    * installed over: by default its extras unchanged; the sink derives
+    * its ledgers from it, so a rebase re-checks them against the
+    * concurrent commit. None makes the install moot (a replayed txn
+    * version): this op's files are removed and nothing installs. An
+    * exception it throws aborts terminally, also removing them.
+    * `slots` is the number of partition-name slots the op allocated
+    * past `m0.maxPartitionIndex`. Aborts loudly when the concurrent
+    * commit rewrote an input file (the Delta concurrent-delete-read
+    * case), collided on an output name, changed the schema/index/rename
+    * mapping this rewrite was planned against, or marked rows of a
+    * replaced file with a deletion vector not in `dvSnapshot`. After
+    * the swap, deletes the replaced files no archived generation
+    * references (unless `retain`) and extends the Bloom / column-stats
+    * sidecars to the new files. */
   private[graft] def installCommit(
       spark: SparkSession,
       dir: String,
@@ -721,7 +729,9 @@ object Maintenance {
       retain: Boolean,
       op: String,
       dvSnapshot: Set[String],
-      added: Seq[Entry] = Nil): Unit = {
+      added: Seq[Entry] = Nil,
+      extrasOver: Sidecar.Meta => Option[Map[String, Any]] =
+        m => Some(m.extras)): Unit = {
     beforeRowLevelInstall()
     val newNames = (replacement.values.flatten ++ added).map(_._1).toSet
     // On a terminal abort, this op's written-but-never-registered
@@ -765,6 +775,17 @@ object Maintenance {
         replacement.getOrElse(name, Seq((name, cur.sizes(p),
           cur.lowerBounds(p), cur.upperBounds(p))))
       } ++ added
+      val extras =
+        try extrasOver(cur)
+        catch {
+          case e: Exception =>
+            abortCleanup(committedNames())
+            throw e
+        }
+      if (extras.isEmpty) {
+        abortCleanup(committedNames())
+        return
+      }
       try {
         guardUnchanged(spark, dirPath, fp)
         if (retain) archiveCurrent(spark, fs, dirPath)
@@ -772,7 +793,7 @@ object Maintenance {
           entries.map(_._1), entries.map(_._2),
           entries.map(_._3), entries.map(_._4),
           math.max(cur.maxPartitionIndex, m0.maxPartitionIndex + slots),
-          cur.schema, extras = cur.extras)
+          cur.schema, extras = extras.get)
         installed = true
       } catch {
         case e: java.util.ConcurrentModificationException =>

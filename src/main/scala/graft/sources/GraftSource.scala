@@ -6,7 +6,7 @@ import org.apache.spark.sql.{Column, DataFrame, GraftRelations, Row, SQLContext,
 import org.apache.spark.sql.functions.{col, lit, not}
 import org.apache.spark.sql.sources._
 
-import graft.core.{BloomIndex, GraftFs, PDataset, Sidecar, Stats}
+import graft.core.{BloomIndex, GraftFs, PDataset, ScatterWrite, Sidecar, Stats}
 
 /** `spark.read.format("graft").load(dir)` — plain-SQL access to a
   * sidecar-carrying dataset directory (the engine's write format:
@@ -27,11 +27,12 @@ import graft.core.{BloomIndex, GraftFs, PDataset, Sidecar, Stats}
   * rowgroup stats, writes parquet, and computes the sidecar in ONE
   * stats job, so the directory reopens with pruning by any reader.
   *
-  * Append is O(delta), not O(table): only the newly written files
-  * are statted, their entries merge into the existing sidecar (whose
-  * possibly-evolved schema stays authoritative), and an existing
-  * Bloom sidecar is extended via [[BloomIndex.update]] — pre-existing
-  * data files are never re-read. Per-file bounds may then overlap
+  * Append is O(delta), not O(table): the write lands in a stage, its
+  * files move into free name slots ([[graft.core.ScatterWrite.place]]),
+  * one stats job covers exactly those files, and they commit through
+  * [[graft.operators.Maintenance.installCommit]] with the txn and
+  * COPY INTO ledgers derived from the generation they land on — no
+  * pre-existing data file is re-read. Per-file bounds may then overlap
   * across append generations; pruning stays sound, it is per file.
   */
 final class GraftSource extends RelationProvider
@@ -278,31 +279,6 @@ final class GraftSource extends RelationProvider
         "stats option: supports numeric, string, date and timestamp " +
           s"columns; $c is ${data.schema(c).dataType.simpleString}")
     }
-    // Compatibility contract for appends, re-checked on every OCC
-    // retry (same as PDataset.prepareWriteTarget): the target's
-    // (possibly evolved) sidecar schema stays authoritative. Unknown
-    // columns would be silently hidden by the sidecar (reading as
-    // dropped data) and type conflicts would fail or corrupt reads
-    // later — reject both up front.
-    def validateAppendCompat(m: Sidecar.Meta): Unit = {
-      require(m.indexColumns == index,
-        s"cannot append with index columns ${index.mkString(",")} to a " +
-          s"dataset indexed on ${m.indexColumns.mkString(",")}")
-      data.schema.fields.foreach { f =>
-        m.schema.fields.find(_.name == f.name) match {
-          case None => throw new IllegalArgumentException(
-            s"appended column ${f.name} does not exist in the target " +
-              "dataset; run Maintenance.addColumns first")
-          case Some(tf) if !org.apache.spark.sql.GraftBridge
-              .sameTypeIgnoreNullability(tf.dataType, f.dataType) =>
-            throw new IllegalArgumentException(
-              s"appended column ${f.name}: ${f.dataType.simpleString} " +
-                s"conflicts with the target's ${tf.dataType.simpleString}")
-          case _ => ()
-        }
-      }
-    }
-
     // Exactly-once idempotent appends (the public Delta txnAppId/
     // txnVersion pattern, and the contract behind the graft streaming
     // sink): a write stamped with a (writer id, version) pair is
@@ -337,6 +313,26 @@ final class GraftSource extends RelationProvider
       parameters.get("copyIntoForce").exists(_.equalsIgnoreCase("true"))
     copyEntries.foreach { _ => require(mode == SaveMode.Append,
       s"COPY INTO appends (got mode $mode)") }
+    def replayed(m: Sidecar.Meta): Boolean = txn.exists { case (app, v) =>
+      m.txnVersions.get(app).exists(_ >= v) }
+    // The extras an append commits over generation `m`: None when m
+    // already records the txn version (a racing replay won); a COPY
+    // INTO file already in m's ledger would double-load, so that
+    // aborts (FORCE re-loads are duplicate-by-intent).
+    def ledgers(m: Sidecar.Meta): Option[Map[String, Any]] =
+      if (replayed(m)) None
+      else Some(m.extras ++ txn.map { case (app, v) =>
+        "txn" -> (m.txnVersions + (app -> v)) } ++
+        copyEntries.map { entries =>
+          val clash = entries.keySet.intersect(m.copyLedger.keySet)
+          if (clash.nonEmpty && !copyForce)
+            throw new IllegalStateException(
+              s"COPY INTO $path: ${clash.size} source file(s) were " +
+                s"loaded by a concurrent COPY INTO (first: " +
+                s"${clash.head}); this batch aborts without registering " +
+                "its rows. Re-run to load the remaining files.")
+          "copyInto" -> (m.copyLedger ++ entries)
+        })
 
     // An append onto an existing sidecar dataset validates against —
     // and then merges into — that sidecar, instead of re-deriving
@@ -358,22 +354,38 @@ final class GraftSource extends RelationProvider
             graft.operators.Maintenance.addColumns(
               spark, path, fresh.toIndexedSeq: _*)
         }
-        val m = Sidecar.load(spark, path)
-        // Fingerprint the sidecar the moment it is loaded: the append
-        // re-checks it right before installing the merged listing, so
-        // a maintenance commit landing during the (long) write window
-        // is detected instead of being overwritten from this stale
-        // base — the same optimistic-concurrency discipline every
-        // Maintenance op follows (plus a bounded self-heal: see the
-        // retry loop at the install site).
+        // Fingerprint the sidecar just BEFORE loading it: the install
+        // compares against it, so a commit landing during the (long)
+        // write window is rebased over or aborts the append instead
+        // of being overwritten from this stale base.
         val fp = graft.operators.Maintenance.metaFingerprint(spark, p)
-        validateAppendCompat(m)
+        val m = Sidecar.load(spark, path)
+        // The target's (possibly evolved) sidecar schema stays
+        // authoritative, as in PDataset.prepareWriteTarget: unknown
+        // columns would be silently hidden by the sidecar (reading as
+        // dropped data) and type conflicts would fail or corrupt reads
+        // later — reject both up front.
+        require(m.indexColumns == index,
+          s"cannot append with index columns ${index.mkString(",")} to " +
+            s"a dataset indexed on ${m.indexColumns.mkString(",")}")
+        data.schema.fields.foreach { f =>
+          m.schema.fields.find(_.name == f.name) match {
+            case None => throw new IllegalArgumentException(
+              s"appended column ${f.name} does not exist in the target " +
+                "dataset; run Maintenance.addColumns first")
+            case Some(tf) if !org.apache.spark.sql.GraftBridge
+                .sameTypeIgnoreNullability(tf.dataType, f.dataType) =>
+              throw new IllegalArgumentException(
+                s"appended column ${f.name}: ${f.dataType.simpleString} " +
+                  s"conflicts with the target's ${tf.dataType.simpleString}")
+            case _ => ()
+          }
+        }
         Some((m, fp))
       } else None
 
     // Replayed transactional batch: nothing to do, nothing written.
-    if (txn.exists { case (app, v) =>
-        appendTo.exists(_._1.txnVersions.get(app).exists(_ >= v)) })
+    if (appendTo.exists { case (m, _) => replayed(m) })
       return createRelation(sqlContext, Map("path" -> path))
 
     // option("dropConstraint", "name1,name2") — the DROP CONSTRAINT
@@ -401,110 +413,47 @@ final class GraftSource extends RelationProvider
       case Some(n) => data.repartitionByRange(n, keys: _*)
       case None => data.repartitionByRange(keys: _*)
     }
-    def dataFileNames(): Set[String] =
-      GraftFs.listStatuses(fs, p).filter(_.isFile)
+    def dataFileNames(d: HPath): IndexedSeq[String] =
+      GraftFs.listStatuses(fs, d).filter(_.isFile)
         .map(_.getPath.getName)
         .filter(n => n.endsWith(".parquet") && !n.startsWith("_") &&
           !n.startsWith("."))
-        .toSet
+        .sorted
 
     appendTo match {
       case Some((m0, fp0)) =>
-        // Incremental append: diff the listing around the write, stat
-        // ONLY the new files (one job over the delta), merge entries.
         // Appended files carry the target's PHYSICAL column names
         // (metadata-only renames map logical back to on-disk names).
-        val before = dataFileNames()
-        m0.toPhysical(shaped.sortWithinPartitions(keys: _*))
-          .write.mode(SaveMode.Append).parquet(path)
-        val added = (dataFileNames() -- before).toIndexedSeq.sorted
-        // Bounded OCC retry: a maintenance commit (compact, upsert,
-        // another append) landing during the write window changes the
-        // sidecar fingerprint. The expensive part — the data write —
-        // is already durable and a conflicting op never touches
-        // unregistered files, so instead of aborting the whole job:
-        // reload the sidecar, re-validate index/schema compatibility,
-        // re-stat and re-merge ONLY this write's files against the
-        // NEW listing, and try the install again. The listing-diff
-        // names are filtered against the reloaded sidecar so files a
-        // concurrent op just registered (e.g. compact outputs) are
-        // never double-registered. Attempts are bounded; a table
-        // churning faster than five delta-sized stat jobs is a
-        // pipeline bug worth surfacing.
-        var m = m0
-        var fp = fp0
-        var attempts = 0
-        var installed = false
-        while (!installed) {
-          val addedPaths = added.filterNot(m.files.contains)
-            .map(n => new HPath(p, n).toString)
-          val byFile = Stats.forFiles(spark, addedPaths,
-            index.map(m.physicalName), Some(m.physicalSchema))
-          val kept = addedPaths.filter(f =>
-            byFile.contains(Stats.normalizePath(f)))
-          val names = kept.map(f => new HPath(f).getName)
-          val stats = kept.map(f => byFile(Stats.normalizePath(f)))
-          // max_partition_index is a name-allocation high-water mark —
-          // never move it backwards (see PDataset.writeMetadata).
-          val maxIdx = math.max(m.maxPartitionIndex,
-            m.files.length + names.length - 1L)
-          var newExtras = txn match {
-            case Some((app, v)) =>
-              m.extras + ("txn" -> (m.txnVersions + (app -> v)))
-            case None => m.extras
-          }
-          copyEntries.foreach { entries =>
-            // A concurrent COPY INTO that committed any of this
-            // batch's files between discovery and install would make
-            // this append a double-load: refuse (not a retryable
-            // CME — the data rows themselves are the conflict). The
-            // just-written files are unregistered; vacuum reclaims
-            // them. FORCE re-loads are duplicate-by-intent.
-            val clash = entries.keySet.intersect(m.copyLedger.keySet)
-            if (clash.nonEmpty && !copyForce)
-              throw new IllegalStateException(
-                s"COPY INTO $path: ${clash.size} source file(s) were " +
-                  s"loaded by a concurrent COPY INTO (first: " +
-                  s"${clash.head}); this batch aborts before " +
-                  "registering its rows — its data files are " +
-                  "unregistered and vacuum reclaims them. Re-run to " +
-                  "load the remaining files.")
-            newExtras += ("copyInto" ->
-              ((m.copyLedger ++ entries): Any))
-          }
+        val stage = GraftFs.mkStageDir(fs,
+          Option(p.getParent).getOrElse(p), ".graft-scatter-", p.getName)
+        val placed =
           try {
-            graft.operators.Maintenance.guardUnchanged(spark, p, fp)
-            Sidecar.write(spark, path, index,
-              m.files ++ names, m.sizes ++ stats.map(_.size),
-              m.lowerBounds ++ stats.map(_.lb),
-              m.upperBounds ++ stats.map(_.ub), maxIdx, m.schema,
-              extras = newExtras)
-            installed = true
-          } catch {
-            case e: java.util.ConcurrentModificationException =>
-              attempts += 1
-              if (attempts >= 5) throw new
-                  java.util.ConcurrentModificationException(
-                s"append to $path lost the sidecar-install race " +
-                  s"$attempts times; the written data files " +
-                  s"(${added.mkString(", ")}) are on disk but " +
-                  "UNREGISTERED — re-run Maintenance or writeMetadata " +
-                  s"to recover (${e.getMessage})")
-              m = Sidecar.load(spark, path)
-              fp = graft.operators.Maintenance.metaFingerprint(spark, p)
-              validateAppendCompat(m)
-          }
+            m0.toPhysical(shaped.sortWithinPartitions(keys: _*))
+              .write.mode(SaveMode.Overwrite).parquet(stage.toString)
+            val staged = dataFileNames(stage)
+            ScatterWrite.place(spark, fs,
+              staged.indices.map(j => j -> Seq(new HPath(stage, staged(j)))),
+              p, j => Sidecar.partitionFileName(m0.maxPartitionIndex + 1 + j))
+          } finally GraftFs.deleteRecursive(fs, stage)
+        def pathOf(n: String): String = new HPath(p, n).toString
+        val byFile = Stats.forFiles(spark, placed.map(w => pathOf(w._2)),
+          index.map(m0.physicalName), Some(m0.physicalSchema))
+        // an empty write still leaves a file, with no bounds to register
+        val (kept, empty) = placed.map(_._2)
+          .partition(n => byFile.contains(Stats.normalizePath(pathOf(n))))
+        empty.foreach(n => fs.delete(new HPath(p, n), false))
+        val added = kept.map { n =>
+          val st = byFile(Stats.normalizePath(pathOf(n)))
+          (n, st.size, st.lb, st.ub)
         }
-        // Extend an existing Bloom sidecar to just the new files; a
-        // first-time bloom option on append still builds from scratch.
-        if (BloomIndex.exists(spark, path))
-          BloomIndex.update(spark, path, bloomCols)
-        else if (bloomCols.nonEmpty)
+        graft.operators.Maintenance.installCommit(spark, path, fs, p,
+          m0, fp0, Map.empty, placed.length, retain = false, "append",
+          Set.empty, added = added, extrasOver = ledgers)
+        // The install extends existing Bloom / column-stats sidecars;
+        // a first-time option on append builds one.
+        if (bloomCols.nonEmpty && !BloomIndex.exists(spark, path))
           BloomIndex.build(spark, path, bloomCols)
-        // Same lifecycle for the column-stats sidecar.
-        if (graft.core.ColumnStats.exists(spark, path))
-          graft.core.ColumnStats.update(spark, path)
-        else if (statsCols.nonEmpty)
+        if (statsCols.nonEmpty && !graft.core.ColumnStats.exists(spark, path))
           graft.core.ColumnStats.build(spark, path, statsCols)
       case None =>
         require(copyEntries.isEmpty,
@@ -515,7 +464,7 @@ final class GraftSource extends RelationProvider
           "txn" -> (Map(app -> v): Any)
         }.toMap
         val targetIsBareData = GraftFs.isDir(fs, p) &&
-          dataFileNames().nonEmpty
+          dataFileNames(p).nonEmpty
         if (txn.isDefined && !targetIsBareData) {
           // First transactional write onto a fresh target: stage the
           // WHOLE commit (data files + sidecar + ledger) in a sibling

@@ -102,6 +102,63 @@ class BloomIndexSpec extends AnyFunSuite {
     assert(scannedFiles(q2) <= 2, "existing filters must survive update()")
   }
 
+  test("the sidecar is read on the driver: same entries as Spark's " +
+      "reader, no job") {
+    val out = tempDir("bloom-spec-driver") + "/ds"
+    val parts = (0 until 300 by 100).map { lo =>
+      PDataset.fromDataFrame(spark.range(lo.toLong, lo + 100L).select(
+        col("id").as("k"), concat(lit("d"), col("id")).as("doc")), Seq("k"))
+    }
+    PDataset.concat(parts).writeParquet(out)
+    BloomIndex.build(spark, out, Seq("doc", "k"), fpp = 0.01)
+    val (fs, dirPath) = graft.core.GraftFs.resolve(spark, out)
+    val copy = tempDir("bloom-spec-copy") + "/bloom.parquet"
+    java.nio.file.Files.copy(
+      java.nio.file.Paths.get(out, BloomIndex.BloomFile),
+      java.nio.file.Paths.get(copy))
+    val want = spark.read.parquet(copy).collect().map(r =>
+      (r.getString(0), r.getString(1), r.getAs[Array[Byte]](2).toSeq,
+        r.getDouble(3))).toSet
+    val got = BloomIndex.readEntries(fs, dirPath).map {
+      case ((f, c), (bytes, fpp)) => (f, c, bytes.toSeq, fpp) }.toSet
+    assert(want.size == 6)
+    assert(got == want)
+    val files = graft.core.Sidecar.load(spark, out).files
+      .map(f => s"$out/$f")
+    val (blooms, jobs) = countJobs(spark)(BloomIndex.forFiles(spark, files))
+    assert(jobs == 0)
+    assert(blooms.keySet == Set("doc", "k") &&
+      blooms.values.forall(_.forall(_.isDefined)))
+  }
+
+  test("a Bloom-extending commit reads the sidecar without a job") {
+    def table(out: String): String = {
+      val parts = (0 until 300 by 100).map { lo =>
+        PDataset.fromDataFrame(spark.range(lo.toLong, lo + 100L).select(
+          col("id").as("k"), concat(lit("d"), col("id")).as("doc")),
+          Seq("k"))
+      }
+      PDataset.concat(parts).writeParquet(out)
+      out
+    }
+    val plain = table(tempDir("bloom-spec-plain") + "/ds")
+    val bloomed = table(tempDir("bloom-spec-extend") + "/ds")
+    BloomIndex.build(spark, bloomed, Seq("doc"))
+    def append(out: String): Int = countJobs(spark) {
+      PDataset.fromDataFrame(spark.range(300L, 400L).select(
+        col("id").as("k"), concat(lit("d"), col("id")).as("doc")), Seq("k"))
+        .writeParquet(out, append = true)
+    }._2
+    // the extension costs one build job over the new file and one
+    // sidecar write; reading the sidecar through Spark added two more
+    val extra = append(bloomed) - append(plain)
+    assert(extra <= 2, s"the Bloom extension started $extra jobs")
+    val q = spark.read.format("graft").load(bloomed)
+      .filter(col("doc") === "d350")
+    assert(q.count() == 1)
+    assert(scannedFiles(q) <= 2)
+  }
+
   test("files appended after the build are never pruned") {
     val extra = spark.range(2000L, 2100L).select(
       col("id").as("k"),

@@ -15,6 +15,18 @@ object AppendRaceGate {
   val gate = new java.util.concurrent.CountDownLatch(1)
 }
 
+/** A re-armable write-window gate for the sink-append race tests:
+  * the appended frame's UDF signals `started` and then blocks on
+  * `gate`, holding the append inside its write job. */
+object SinkWindowGate {
+  @volatile var started = new java.util.concurrent.CountDownLatch(1)
+  @volatile var gate = new java.util.concurrent.CountDownLatch(1)
+  def reset(): Unit = {
+    started = new java.util.concurrent.CountDownLatch(1)
+    gate = new java.util.concurrent.CountDownLatch(1)
+  }
+}
+
 /** `spark.read.format("graft")`: the registered short name over a
   * sidecar-carrying dataset directory — correct rows, sidecar schema,
   * plan-time file pruning, and plain-SQL access. */
@@ -431,6 +443,145 @@ class GraftSourceSpec extends AnyFunSuite {
         !n.startsWith(".")).toSet
     assert(onDisk == m.files.toSet,
       s"disk/sidecar mismatch: ${onDisk.diff(m.files.toSet)} orphaned")
+  }
+
+  /** 4 files of 50 consecutive keys (k, payload = "orig"). */
+  private def writeFourFiles(out: String): Unit = {
+    val parts = (0L until 200L by 50L).map { lo =>
+      PDataset.fromDataFrame(spark.range(lo, lo + 50L).select(
+        col("id").as("k"), lit("orig").as("payload")), Seq("k"))
+    }
+    PDataset.concat(parts).writeParquet(out)
+  }
+
+  /** Rows k = 1000..1009 from ONE task that blocks on [[SinkWindowGate]]
+    * (`gated`) or runs freely. */
+  private def tenRows(gated: Boolean) = {
+    val block = udf { k: Long =>
+      SinkWindowGate.started.countDown()
+      SinkWindowGate.gate.await(60, java.util.concurrent.TimeUnit.SECONDS)
+      k
+    }
+    val id = col("id")
+    spark.range(1000L, 1010L, 1L, 1)
+      .select((if (gated) block(id) else id).as("k"), lit("mine").as("payload"))
+  }
+
+  /** Every parquet file in the table directory is registered. */
+  private def assertNoOrphans(out: String): Unit = {
+    val m = graft.core.Sidecar.load(spark, out)
+    val (fs, p) = graft.core.GraftFs.resolve(spark, out)
+    val onDisk = fs.listStatus(p).filter(_.isFile).map(_.getPath.getName)
+      .filter(n => n.endsWith(".parquet") && !n.startsWith("_") &&
+        !n.startsWith(".")).toSet
+    assert(onDisk == m.files.toSet,
+      s"disk/sidecar mismatch: ${onDisk.diff(m.files.toSet)} orphaned")
+  }
+
+  /** Start the gated ten-row append on another thread and wait until
+    * it is inside its write job; returns its future. */
+  private def heldAppend(out: String, options: Map[String, String] = Map.empty)
+      : scala.concurrent.Future[Unit] = {
+    import scala.concurrent.ExecutionContext.Implicits.global
+    SinkWindowGate.reset()
+    val fut = scala.concurrent.Future {
+      tenRows(gated = true).write.format("graft").mode("append")
+        .options(options).option("files", "1").save(out)
+    }
+    assert(SinkWindowGate.started.await(
+      60, java.util.concurrent.TimeUnit.SECONDS), "append never started")
+    fut
+  }
+
+  test("sink append racing an upsert's install registers only its own " +
+      "files") {
+    import spark.implicits._
+    import scala.concurrent.Await
+    import scala.concurrent.duration._
+    val out = tempDir("graft-source-upsert-race") + "/ds"
+    writeFourFiles(out)
+    val fut = heldAppend(out)
+    // the upsert's new file is durable but uninstalled at its seam:
+    // release the append there and let it commit first
+    Maintenance.beforeRowLevelInstall = () => {
+      Maintenance.beforeRowLevelInstall = () => ()
+      SinkWindowGate.gate.countDown()
+      Await.result(fut, 120.seconds)
+    }
+    try Maintenance.upsert(spark, out, Seq((25L, "v25")).toDF("k", "payload"))
+    finally Maintenance.beforeRowLevelInstall = () => ()
+    val got = spark.read.format("graft").load(out)
+    assert(got.count() == 210L)
+    assert(got.select("k").distinct().count() == 210L, "a key is duplicated")
+    assert(got.filter(col("k") === 25L).collect().map(_.getString(1))
+      .toSeq == Seq("v25"))
+    assert(got.filter(col("payload") === "mine").count() == 10L)
+    assertNoOrphans(out)
+  }
+
+  test("a replayed txn batch racing the original lands once") {
+    import scala.concurrent.Await
+    import scala.concurrent.duration._
+    val out = tempDir("graft-source-txn-race") + "/ds"
+    PDataset.fromDataFrame(spark.range(0L, 100L).select(
+      col("id").as("k"), lit("orig").as("payload")), Seq("k"))
+      .writeParquet(out)
+    val txn = Map("txnAppId" -> "w", "txnVersion" -> "1")
+    val fut = heldAppend(out, txn)
+    // the replay commits while the original is inside its write job
+    tenRows(gated = false).write.format("graft").mode("append")
+      .options(txn).option("files", "1").save(out)
+    SinkWindowGate.gate.countDown()
+    Await.result(fut, 120.seconds)
+    val got = spark.read.format("graft").load(out)
+    assert(got.count() == 110L)
+    assert(got.filter(col("payload") === "mine").count() == 10L)
+    assert(graft.core.Sidecar.load(spark, out).txnVersions == Map("w" -> 1L))
+    assertNoOrphans(out)
+  }
+
+  test("a COPY INTO whose ledger clashes at install aborts and removes " +
+      "its files") {
+    val root = tempDir("graft-source-copy-race")
+    val out = root + "/t"
+    val landing = root + "/landing"
+    writeFourFiles(out)
+    java.nio.file.Files.createDirectories(java.nio.file.Paths.get(landing))
+    graft.core.Sidecar.writeSingleParquet(tenRows(gated = false),
+      landing + "/a.parquet")
+    // a concurrent COPY INTO of the same file commits first
+    Maintenance.beforeRowLevelInstall = () => {
+      Maintenance.beforeRowLevelInstall = () => ()
+      graft.operators.CopyInto.copyInto(spark, out, landing, "parquet")
+      ()
+    }
+    val e =
+      try intercept[IllegalStateException] {
+        graft.operators.CopyInto.copyInto(spark, out, landing, "parquet")
+      } finally Maintenance.beforeRowLevelInstall = () => ()
+    assert(e.getMessage.contains("concurrent COPY INTO"), e.getMessage)
+    val got = spark.read.format("graft").load(out)
+    assert(got.count() == 210L, "the file must load exactly once")
+    assertNoOrphans(out)
+  }
+
+  test("sink append during a concurrent addColumns aborts and leaves " +
+      "the rows unchanged") {
+    val out = tempDir("graft-source-schema-race") + "/ds"
+    writeFourFiles(out)
+    Maintenance.beforeRowLevelInstall = () => {
+      Maintenance.beforeRowLevelInstall = () => ()
+      Maintenance.addColumns(spark, out, org.apache.spark.sql.types
+        .StructField("extra", org.apache.spark.sql.types.StringType))
+    }
+    try intercept[java.util.ConcurrentModificationException] {
+      tenRows(gated = false).write.format("graft").mode("append")
+        .option("files", "1").save(out)
+    } finally Maintenance.beforeRowLevelInstall = () => ()
+    val got = spark.read.format("graft").load(out)
+    assert(got.count() == 200L)
+    assert(got.columns.contains("extra"))
+    assertNoOrphans(out)
   }
 
   test("constraints land and trip purely through the SQL surface") {
